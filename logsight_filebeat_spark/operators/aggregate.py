@@ -31,11 +31,13 @@ def sink_hour_aggregates(
     routed: DataFrame,
     ts_col: str = "warc_ts",
     bytes_cols: tuple[str, ...] = ("message",),
+    extra_aggs: tuple[Column, ...] = (),
 ) -> DataFrame:
     """(sink, hour) → event_count, byte_total, failed_count,
     parse_failure_rate. Quarantined/failed rows count into the same buckets
     (failure rate per hour is the point), byte totals count delivered payload
-    bytes only — the receipt measures what was shipped."""
+    bytes only — the receipt measures what was shipped. ``extra_aggs`` ride
+    along in the same aggregation, placed before parse_failure_rate."""
     byte_expr = sum(
         (F.coalesce(F.octet_length(F.col(c)), F.lit(0)) for c in bytes_cols),
         F.lit(0),
@@ -49,6 +51,7 @@ def sink_hour_aggregates(
             F.count(F.lit(1)).alias("event_count"),
             F.sum(F.when(~is_failed, byte_expr).otherwise(F.lit(0))).alias("byte_total"),
             F.sum(F.when(is_failed, 1).otherwise(0)).alias("failed_count"),
+            *extra_aggs,
         )
         .withColumn(
             "parse_failure_rate",

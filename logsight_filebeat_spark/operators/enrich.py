@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# lookups up to this many rows compile into literal maps (enrich_with_lookup)
+LITERAL_MAP_MAX_ENTRIES = 64
+
 
 def url_host(col: Column | str = "url") -> Column:
     """url → host. try_parse_url is codegen'd JVM-side; NULL on malformed
@@ -45,7 +48,7 @@ def enrich_with_lookup(
     tag_cols: dict[str, str],
     tags_col: str = "tags",
     lookup_key: str | None = None,
-    max_literal_entries: int | None = 64,
+    max_literal_entries: int | None = LITERAL_MAP_MAX_ENTRIES,
 ) -> DataFrame:
     """Enrich from a lookup table, folding selected lookup columns into
     the tags map as {tag_key: value}; rows with no match (or NULL values)

@@ -11,27 +11,37 @@ Dataflow per batch (all-Column except the optional vectorized grok stage):
 
   scan(pages) → [multiline explode] → grok parse → to_log (map + validate)
   → enrich (broadcast joins) → route → ONE persisted DF
-  → { routed write (partitioned by batch, sink), sink-hour aggregates,
-      receipts, lineage commit }
+  → routed write (partitioned by batch_id, sink)
+  → ONE collected (sink, hour) aggregate → on the driver: metrics rows,
+    per-sink receipts, ACK totals → metrics + receipts writes (partitioned
+    by batch_id) → lineage marker renamed into place (the ACK)
 
 Scale notes: the persist before fan-out avoids rescanning the parse stage per
-sink (§4.3); writes partition by (batch_id, sink) so reruns overwrite
-idempotently; aggregates are a single low-cardinality hash agg.
+sink (§4.3); the aggregate is a single low-cardinality hash agg whose few
+hundred rows are all the driver needs for receipts and totals; every write
+overwrites its batch_id partition, so reruns are idempotent; the lineage
+check and commit are single FileSystem calls, not Spark jobs.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from logsight_filebeat_spark.config import PipelineConfig
 from logsight_filebeat_spark.operators import parse as parse_ops
-from logsight_filebeat_spark.operators.aggregate import receipts, sink_hour_aggregates
-from logsight_filebeat_spark.operators.enrich import enrich_with_lookup, url_host
+from logsight_filebeat_spark.operators.aggregate import sink_hour_aggregates
+from logsight_filebeat_spark.operators.enrich import (
+    LITERAL_MAP_MAX_ENTRIES,
+    enrich_with_lookup,
+    url_host,
+)
 from logsight_filebeat_spark.operators.log_mapper import ERROR_COL, to_log
 from logsight_filebeat_spark.operators.parse import (
     CompiledGrok,
@@ -44,6 +54,7 @@ from logsight_filebeat_spark.sinks import lineage as lineage_ops
 from logsight_filebeat_spark.sinks.writers import write_routed
 
 DEFAULT_GROK = "%{NOTSPACE:timestamp} %{WORD:level} %{GREEDYDATA:message}"
+_ACK_BYTES = "_ack_bytes"  # run_batch's all-rows byte sum, for the ACK only
 
 
 @dataclass
@@ -103,53 +114,88 @@ class PipelinePlan:
         pages: DataFrame,
         batch_id: str,
         sink_root: str | None = None,
-        write: bool = True,
     ) -> dict:
-        """Publish one batch (plugin/client.go:112-129): map, segregate,
-        write, account, ACK. Returns the receipt summary."""
+        """Publish one batch (plugin/client.go:112-129) in one pass: map,
+        segregate, write, account, ACK. Returns the receipt summary.
+
+        The routed write is the only full pass over the mapped rows; the
+        (sink, hour) aggregate then runs off the persisted frame and is
+        collected — a few hundred rows — so receipts and the ACK totals are
+        sums over it on the driver, not further jobs. Every write overwrites
+        the batch's ``batch_id`` partition, so a rerun after a crash at any
+        step replaces what the crashed run wrote."""
         root = sink_root or self.cfg.sink_root
-        if write and lineage_ops.is_committed(spark, root, batch_id):
+        if lineage_ops.is_committed(spark, root, batch_id):
             return {"batch_id": batch_id, "skipped": True}  # registrar resume
 
         routed = self.mapped(pages).withColumn("batch_id", F.lit(batch_id))
         routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            agg = sink_hour_aggregates(routed, ts_col=self.event_ts_col)
-            rec = receipts(routed, batch_id)
-            if write:
-                write_routed(
-                    routed.select(
-                        "batch_id", SINK_COL, "timestamp", "message", "level",
-                        "tags", ERROR_COL, "url", self.event_ts_col,
-                    ),
-                    root,
-                    partition_cols=("batch_id", SINK_COL),
-                    target_file_rows=self.cfg.batch_size * 1000,
-                )
-                agg.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                    "append"
-                ).parquet(os.path.join(root, "metrics"))
-                rec.write.mode("append").parquet(os.path.join(root, "receipts"))
-
-            totals = routed.agg(
-                F.sum(F.when(F.col(ERROR_COL).isNull(), 1).otherwise(0)).alias("ok"),
-                F.sum(F.when(F.col(ERROR_COL).isNotNull(), 1).otherwise(0)).alias("failed"),
-                F.sum(F.coalesce(F.octet_length("message"), F.lit(0))).alias("bytes"),
-            ).first()
-            if write:
-                lineage_ops.commit_batch(  # the ACK — after data is durable
-                    spark, root, batch_id,
-                    int(totals.ok or 0), int(totals.failed or 0), int(totals.bytes or 0),
-                )
-            return {
-                "batch_id": batch_id,
-                "skipped": False,
-                "rows_ok": int(totals.ok or 0),
-                "rows_failed": int(totals.failed or 0),
-                "byte_total": int(totals.bytes or 0),
-            }
+            write_routed(
+                routed.select(
+                    "batch_id", SINK_COL, "timestamp", "message", "level",
+                    "tags", ERROR_COL, "url", self.event_ts_col,
+                ),
+                root,
+                partition_cols=("batch_id", SINK_COL),
+                target_file_rows=self.cfg.batch_size * 1000,
+            )
+            # the ACK's byte_total counts every row's message, failed too
+            agg = sink_hour_aggregates(
+                routed,
+                ts_col=self.event_ts_col,
+                extra_aggs=(
+                    F.sum(F.coalesce(F.octet_length("message"), F.lit(0))).alias(_ACK_BYTES),
+                ),
+            ).toArrow()
         finally:
             routed.unpersist()
+
+        byte_total = sum(agg.column(_ACK_BYTES).to_pylist())
+        metrics = agg.drop_columns([_ACK_BYTES])
+        metrics = metrics.append_column(
+            "batch_id", pa.array([batch_id] * metrics.num_rows, pa.string())
+        )
+        _overwrite_batch(spark.createDataFrame(metrics), root, "metrics")
+
+        by_sink = agg.group_by(SINK_COL).aggregate(
+            [("event_count", "sum"), ("failed_count", "sum")]
+        )
+        sinks = by_sink.column(SINK_COL).to_pylist()
+        failed = by_sink.column("failed_count_sum").to_pylist()
+        ok = [n - f for n, f in zip(by_sink.column("event_count_sum").to_pylist(), failed)]
+        receipts = pa.table({  # cast to RECEIPTS_SCHEMA by createDataFrame
+            "receipt_id": [
+                hashlib.sha256(f"{batch_id}|{s}".encode("utf-8")).hexdigest() for s in sinks
+            ],
+            "sink": sinks,
+            "logs_count": ok,
+            "batch_id": [batch_id] * len(sinks),
+            "status": [200 if f == 0 else 207 for f in failed],
+        })
+        _overwrite_batch(
+            spark.createDataFrame(receipts, lineage_ops.RECEIPTS_SCHEMA), root, "receipts"
+        )
+
+        rows_ok, rows_failed = sum(ok), sum(failed)
+        lineage_ops.commit_batch(  # the ACK — after data is durable
+            spark, root, batch_id, rows_ok, rows_failed, byte_total
+        )
+        return {
+            "batch_id": batch_id,
+            "skipped": False,
+            "rows_ok": rows_ok,
+            "rows_failed": rows_failed,
+            "byte_total": byte_total,
+        }
+
+
+def _overwrite_batch(rows: DataFrame, root: str, table: str) -> None:
+    """Write a batch's few rows of ``table`` as one file, replacing whatever
+    an earlier (crashed) run of the same batch left in its partition."""
+    rows.coalesce(1).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("batch_id").parquet(os.path.join(root, table))
 
 
 def compile(
@@ -179,9 +225,23 @@ def compile(
         grok=grok,
         multiline=multiline,
         vectorized=vectorized,
-        lookups=list(lookups or []),
+        lookups=[_pin_small(lk) for lk in lookups or []],
         event_ts_col=event_ts_col,
     )
+
+
+def _pin_small(lookup: Lookup) -> Lookup:
+    """Copy a lookup small enough for enrich's literal-map path into a
+    driver-local relation, once. ``mapped`` probes every lookup each time it
+    builds a batch's plan; on a local relation that probe runs no Spark job.
+    Like the reference's config, the copy is taken at compile time. Larger
+    lookups stay as given (broadcast join)."""
+    table = lookup.table
+    rows = table.limit(LITERAL_MAP_MAX_ENTRIES + 1).toArrow()
+    if rows.num_rows > LITERAL_MAP_MAX_ENTRIES:
+        return lookup
+    local = table.sparkSession.createDataFrame(rows, table.schema)
+    return replace(lookup, table=local)
 
 
 def standard_pages_config(sink_root: str = "") -> PipelineConfig:

@@ -8,12 +8,17 @@ module closes the loop with Structured Streaming: a file-source readStream
 tails the pages directory (the harvester — new files are discovered and
 offset-tracked by the streaming checkpoint, exactly the registrar's job), and
 ``foreachBatch`` hands each micro-batch to PipelinePlan.run_batch, which
-writes routed data + metrics + receipts and commits lineage (the ACK).
+overwrites the batch's partition of routed data, metrics and receipts and
+then renames its lineage marker into place (the ACK).
 
 Delivery is exactly-once from either side alone — the streaming checkpoint
-replays an epoch only if it did not commit, and run_batch's lineage guard +
-dynamic partition overwrite make replays idempotent anyway (belt and braces,
-SURVEY §4.4).
+replays an epoch only if it did not commit, and run_batch's marker guard +
+batch_id partition overwrite make replays idempotent anyway (belt and
+braces, SURVEY §4.4). A batch is named ``epoch-{queryId}-{epoch}``: the
+query id lives in the checkpoint, so a replaced checkpoint starts a fresh
+id space instead of colliding with (and skipping as "already committed")
+the batches of the old one. The flip side: re-reading the same files under
+a new checkpoint republishes them under new batch ids.
 
 There is also a pure-streaming aggregate path (``streaming_aggregates``):
 watermarked event-time windows over the routed stream for the per-(sink,
@@ -65,10 +70,11 @@ def run_stream(
     stream = read_pages_stream(spark, input_dir, max_files_per_trigger)
 
     def publish(batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch_id is stable across replays of an uncommitted epoch, so the
-        # lineage guard sees the same batch_id and the rerun is idempotent
+        # stable across restarts of one checkpoint, distinct per checkpoint
+        spark = batch_df.sparkSession
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         plan.run_batch(
-            batch_df.sparkSession, batch_df, f"epoch-{epoch_id}", sink_root=sink_root
+            spark, batch_df, f"epoch-{query_id}-{epoch_id}", sink_root=sink_root
         )
 
     writer = stream.writeStream.foreachBatch(publish).option(

@@ -116,6 +116,164 @@ def test_crash_rerun_is_exactly_once(plan, spark, tmp_path):
     assert lineage_ops.is_committed(spark, root, "bx")
 
 
+def test_run_batch_tables_equal_the_operators(plan, spark, tmp_path):
+    """The metrics and receipts run_batch derives from its one collected
+    aggregate are exactly what the Spark operators compute over the same
+    routed rows."""
+    from logsight_filebeat_spark.operators.aggregate import (
+        receipts,
+        sink_hour_aggregates,
+    )
+
+    root = str(tmp_path / "sinks")
+    pg = pages(spark, 300, seed=12)
+    res = plan.run_batch(spark, pg, "bt", sink_root=root)
+    routed = plan.mapped(pg)
+
+    want = sink_hour_aggregates(routed)
+    got = spark.read.parquet(f"{root}/metrics").filter(F.col("batch_id") == "bt")
+    assert sorted(got.select(*want.columns).collect()) == sorted(want.collect())
+
+    want = receipts(routed, "bt")
+    got = lineage_ops.read_receipts(spark, root).select(*want.columns)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+    [row] = lineage_ops.read_lineage(spark, root).collect()
+    assert row.asDict() == {
+        "batch_id": "bt",
+        "status": "committed",
+        "rows_ok": res["rows_ok"],
+        "rows_failed": res["rows_failed"],
+        "byte_total": res["byte_total"],
+    }
+    assert res["byte_total"] == routed.agg(
+        F.sum(F.coalesce(F.octet_length("message"), F.lit(0)))
+    ).first()[0]
+
+
+def _published(spark, root: str) -> dict[str, list[str]]:
+    """Every table run_batch writes, as sorted row reprs."""
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    return {
+        "routed": rows(spark.read.parquet(f"{root}/routed")),
+        "metrics": rows(spark.read.parquet(f"{root}/metrics")),
+        "receipts": rows(spark.read.parquet(f"{root}/receipts")),
+        "lineage": rows(lineage_ops.read_lineage(spark, root)),
+    }
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.fixture(scope="module")
+def crash_pages(spark):
+    return pages(spark, 200, seed=6)
+
+
+@pytest.fixture(scope="module")
+def clean_run(plan, spark, crash_pages, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("clean"))
+    plan.run_batch(spark, crash_pages, "bc", sink_root=root)
+    return _published(spark, root)
+
+
+@pytest.mark.parametrize("step", ["routed", "metrics", "receipts", "marker"])
+def test_crash_after_any_write_reruns_exactly_once(
+    plan, spark, crash_pages, clean_run, tmp_path, monkeypatch, step
+):
+    """A crash right after any write of run_batch, then a rerun of the same
+    batch id, leaves every table equal to one clean run: the rerun replaces
+    the batch's partitions instead of appending to them."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from logsight_filebeat_spark.plans import pipeline
+
+    def then_crash(fn):
+        def wrapper(*args, **kwargs):
+            fn(*args, **kwargs)
+            raise _Crash(step)
+        return wrapper
+
+    if step == "routed":
+        monkeypatch.setattr(pipeline, "write_routed", then_crash(pipeline.write_routed))
+    elif step == "marker":
+        monkeypatch.setattr(lineage_ops, "commit_batch", then_crash(lineage_ops.commit_batch))
+    else:
+        parquet = DataFrameWriter.parquet
+
+        def crash_on_table(writer, path, *args, **kwargs):
+            parquet(writer, path, *args, **kwargs)
+            if path.endswith(step):
+                raise _Crash(step)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_table)
+
+    root = str(tmp_path / "sinks")
+    with pytest.raises(_Crash):
+        plan.run_batch(spark, crash_pages, "bc", sink_root=root)
+    monkeypatch.undo()
+    res = plan.run_batch(spark, crash_pages, "bc", sink_root=root)
+    assert res["skipped"] is (step == "marker")
+    assert _published(spark, root) == clean_run
+
+
+def test_lineage_errors_raise(plan, spark, tmp_path):
+    """Only a missing _lineage dir reads as "nothing committed"; a marker
+    that cannot be read, or that names another batch, raises."""
+    import glob
+    import os
+    import shutil
+
+    root = str(tmp_path / "sinks")
+    assert lineage_ops.read_lineage(spark, root).count() == 0
+    assert not lineage_ops.is_committed(spark, root, "bu")
+
+    plan.run_batch(spark, pages(spark, 100, seed=9), "bu", sink_root=root)
+    assert lineage_ops.is_committed(spark, root, "bu")
+    [marker] = glob.glob(f"{root}/_lineage/*.json")
+
+    # a marker filed under another batch's name
+    other = os.path.join(os.path.dirname(marker), "bv".encode().hex() + ".json")
+    shutil.copy(marker, other)
+    with pytest.raises(ValueError, match="holds batch"):
+        lineage_ops.read_lineage(spark, root)
+    os.remove(other)
+
+    # garbage in the marker (checksum side files dropped, so the bytes reach
+    # the parser)
+    for crc in glob.glob(f"{root}/_lineage/.*.crc"):
+        os.remove(crc)
+    with open(marker, "w") as f:
+        f.write("{not json")
+    with pytest.raises(ValueError):
+        lineage_ops.read_lineage(spark, root)
+
+
+def test_new_checkpoint_on_a_shared_sink_publishes_its_files(plan, spark, tmp_path):
+    """Draining in1 with checkpoint ck1, then in2 with a new checkpoint ck2,
+    into the same sink routes both: the second checkpoint's epochs do not
+    collide with the batches the first one committed."""
+    from logsight_filebeat_spark.streaming.micro_batch import run_stream
+
+    sink = str(tmp_path / "sink")
+    expected = 0
+    for n, seed in ((1, 21), (2, 22)):
+        pg = pages(spark, 200, seed=seed)
+        pg.coalesce(1).write.parquet(str(tmp_path / f"in{n}"))
+        expected += plan.mapped(pg).count()
+        q = run_stream(
+            spark, plan, str(tmp_path / f"in{n}"), sink,
+            checkpoint_dir=str(tmp_path / f"ck{n}"),
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+    assert spark.read.parquet(f"{sink}/routed").count() == expected
+    assert len({r.batch_id for r in lineage_ops.read_lineage(spark, sink).collect()}) == 2
+
+
 def test_compile_rejects_bad_route():
     from logsight_filebeat_spark.config import ConfigError
 
@@ -243,7 +401,7 @@ def test_read_receipts_lenient_on_missing_and_corrupt(plan, spark, tmp_path):
     # corrupt one receipt file in place → that file is skipped, read succeeds
     import glob
 
-    victim = glob.glob(f"{root}/receipts/*.parquet")[0]
+    victim = glob.glob(f"{root}/receipts/**/*.parquet")[0]
     with open(victim, "wb") as f:
         f.write(b"not a parquet file at all")
     lenient = lineage_ops.read_receipts(spark, root)
