@@ -216,6 +216,7 @@ class CompiledGrok:
     fields: tuple[str, ...]  # capture-group order, group i+1 = fields[i]
     named_regex: str = ""  # capturing groups renamed (?P<gi>…) for RE2
     arrow_re2: bool = False  # vectorized path may use pyarrow RE2 (C)
+    witness: int | None = None  # group non-empty in every match (_witness_group)
 
     @property
     def python(self) -> re.Pattern:
@@ -265,6 +266,24 @@ def _expand_grok(
     return "".join(parts)
 
 
+def _witness_group(regex: str) -> int | None:
+    """The first capture group that every match of ``regex`` fills with at
+    least one character, or None when there is none.
+
+    A group at the top level of the regex — outside any optional,
+    alternation or repeat — participates in every match, and a minimum
+    width of at least 1 makes its capture non-empty; ``regexp_extract``
+    returns '' on no match, so ``regexp_extract(c, regex, g) != ''`` is
+    exactly ``c rlike regex`` and the native path tests the match on a
+    capture it computes anyway. Python's parser inlines plain ``(?:…)``
+    groups, so their members count as top level too."""
+    for op, av in re._parser.parse(regex):
+        if op is re._parser.SUBPATTERN and av[0] is not None:
+            if av[-1].getwidth()[0] >= 1:
+                return av[0]
+    return None
+
+
 def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> CompiledGrok:
     """Expand %{BASE:field} refs into one regex with positional groups.
     Vocabulary bodies expand recursively (composites emit nested fields);
@@ -290,6 +309,7 @@ def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> 
         fields=tuple(fields),
         named_regex=named,
         arrow_re2=_arrow_re2_ok(named),
+        witness=_witness_group(regex),
     )
 
 
@@ -792,24 +812,32 @@ def explode_multiline(
 # grok execution — native Column path
 # ---------------------------------------------------------------------------
 
-def grok_native(col: Column | str, grok: CompiledGrok) -> Column:
-    """One struct column of captures; NULL struct when no match (the row
-    failure of mapper.go:145-150 — NOT an empty string). Each field is one
-    regexp_extract; Catalyst codegens these with a cached compiled pattern,
-    and common-subexpression elimination shares the match work."""
-    c = F.col(col) if isinstance(col, str) else col
-    matched = c.rlike(grok.regex)
-    fields = [
-        F.regexp_extract(c, grok.regex, i + 1).alias(name)
-        for i, name in enumerate(grok.fields)
-    ]
-    return F.when(matched, F.struct(*fields))
-
-
 def with_grok_native(
     df: DataFrame, col: str, grok: CompiledGrok, out: str = "parsed"
 ) -> DataFrame:
-    return df.withColumn(out, grok_native(col, grok))
+    """Adds ``out``: one struct of captures, NULL when the regex does not
+    match (the row failure of mapper.go:145-150 — NOT an empty string).
+
+    Each field is one ``regexp_extract`` projected into its own temporary
+    column, so every capture runs once per row; the match test then reads
+    the witness capture (``CompiledGrok.witness``) instead of running the
+    regex again, and only a pattern without a witness keeps one ``rlike``.
+    The struct is built in a second projection over the captures:
+    Catalyst's CollapseProject does not inline a non-cheap alias that is
+    referenced twice (the witness, in the test and in the struct), so the
+    captures are not re-evaluated inside the ``CASE WHEN``. The
+    temporaries are dropped before returning."""
+    caps = [f"__{out}_g{i}" for i in range(len(grok.fields))]
+    c = F.col(col)
+    mid = df.withColumns(
+        {t: F.regexp_extract(c, grok.regex, i + 1) for i, t in enumerate(caps)}
+    )
+    if grok.witness is None:
+        matched = c.rlike(grok.regex)
+    else:
+        matched = F.col(caps[grok.witness - 1]) != ""
+    struct = F.struct(*[F.col(t).alias(f) for t, f in zip(caps, grok.fields)])
+    return mid.withColumn(out, F.when(matched, struct)).drop(*caps)
 
 
 def grok_set_native(col: Column | str, gs: CompiledGrokSet) -> tuple[Column, Column]:
@@ -864,7 +892,7 @@ def with_grok_vectorized(
     Python *interpretation* — the regex engine is C). All pre/post logic
     stays in Columns; this is the only JVM→Python hop in the pipeline
     (SURVEY §4.2). Fields come back as a struct column, NULL on no-match —
-    byte-identical to grok_native and to the single-threaded oracle.
+    byte-identical to with_grok_native and to the single-threaded oracle.
 
     Hot-path shape: ONE extraction pass per batch, preferring pyarrow's
     ``extract_regex`` — a true RE2 engine running in C over the Arrow
@@ -905,7 +933,9 @@ def with_grok_vectorized(
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            st = pc.extract_regex(pa.Array.from_pandas(s), pattern=named)
+            st = pc.extract_regex(
+                pa.Array.from_pandas(s, type=pa.string()), pattern=named
+            )
             cols = {
                 f"g{i}": st.field(f"g{i}").to_pandas() for i in range(nf)
             }
@@ -994,7 +1024,7 @@ def with_grok_set_vectorized(
             sub = s.loc[remaining]
             if named is not None:  # RE2 C path
                 st = pc.extract_regex(
-                    pa.Array.from_pandas(sub), pattern=named
+                    pa.Array.from_pandas(sub, type=pa.string()), pattern=named
                 )
                 ok = pc.is_valid(st).to_pandas()
                 ok.index = sub.index

@@ -17,56 +17,48 @@ the parse stage (SURVEY §4.3).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logsight_filebeat_spark.config import MapperConf, PipelineConfig
-from logsight_filebeat_spark.functions.mappers import (
-    constant_mapper,
-    key_mapper,
-    key_regex_mapper,
-    string_guard,
-)
+from logsight_filebeat_spark.config import PipelineConfig
+from logsight_filebeat_spark.functions.mappers import string_key_mapper
 
 SINK_COL = "sink"
 
 
-def compile_route(df: DataFrame, rule: MapperConf) -> Column:
-    """One rule → a nullable string Column (NULL = rule failed for the row).
-
-    Precedence per mapperConf.toMapper (config.go:40-55); ConfigError raised
-    from rule.kind() for invalid regex / all-empty, at compile time, exactly
-    where the reference errors.
-    """
-    kind = rule.kind()
-    if kind == "regex":
-        mapped = key_regex_mapper(df, rule.key, rule.regex_matcher)
-    elif kind == "key":
-        mapped = string_guard(df, rule.key, key_mapper(df, rule.key))
-    else:  # constant
-        mapped = constant_mapper(rule.name)
-    # every mapper's value is NULL exactly when its error is set (mappers.py
-    # invariant), so routing on the value alone skips evaluating the error
-    # expression — for regex rules that halves the per-row regex work
-    return mapped.value
-
-
-def sink_column(
-    df: DataFrame, rules: Sequence[MapperConf], quarantine: str = "_quarantine"
-) -> Column:
-    """First-success-wins over the rule list; all-fail ⇒ quarantine sink."""
-    routed = [compile_route(df, r) for r in rules]
-    return F.coalesce(*routed, F.lit(quarantine)) if routed else F.lit(quarantine)
-
-
 def route(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Add the `sink` column. Rows already failed by the log mapper
-    (non-NULL `_error`) route to quarantine regardless of rules."""
-    col = sink_column(df, cfg.routes, cfg.quarantine_sink)
+    """Add the `sink` column: first-success-wins over ``cfg.routes``, every
+    rule failing ⇒ the quarantine sink. Rows already failed by the log
+    mapper (non-NULL `_error`) route to quarantine regardless of rules.
+
+    Each rule compiles by precedence (mapperConf.toMapper, config.go:40-55);
+    ``rule.kind()`` raises ConfigError for an invalid regex or an all-empty
+    rule at compile time, exactly where the reference errors. A rule's
+    value is NULL exactly when its mapper fails (mappers.py invariant), so
+    routing reads values only. For a regex rule that value is
+    ``key_regex_mapper(...).value``: the first capture, NULL on a NULL or
+    non-string key, on no match and on an empty capture. Its
+    ``regexp_extract`` is projected once into a temporary column, and the
+    value is ``when(capture != '', capture)`` over it — no ``rlike``, and
+    the capture, referenced twice, stays in its own projection
+    (CollapseProject does not inline it), so the regex runs once per row.
+    """
+    captures: dict[str, Column] = {}
+    values: list[Column] = []
+    for i, rule in enumerate(cfg.routes):
+        kind = rule.kind()
+        if kind == "regex":
+            tmp = f"__{SINK_COL}_capture{i}"
+            key = string_key_mapper(df, rule.key).value
+            captures[tmp] = F.regexp_extract(key, rule.regex_matcher, 1)
+            values.append(F.when(F.col(tmp) != "", F.col(tmp)))
+        elif kind == "key":
+            values.append(string_key_mapper(df, rule.key).value)
+        else:  # constant
+            values.append(F.lit(rule.name))
+    sink = F.coalesce(*values, F.lit(cfg.quarantine_sink))
     if "_error" in df.columns:
-        col = F.when(F.col("_error").isNotNull(), F.lit(cfg.quarantine_sink)).otherwise(
-            col
-        )
-    return df.withColumn(SINK_COL, col)
+        sink = F.when(
+            F.col("_error").isNotNull(), F.lit(cfg.quarantine_sink)
+        ).otherwise(sink)
+    return df.withColumns(captures).withColumn(SINK_COL, sink).drop(*captures)

@@ -66,6 +66,42 @@ def test_explode_multiline_indexes(spark):
     assert [(r.event_idx, r.event_text) for r in rows] == [(0, "a"), (1, "b\n  cont")]
 
 
+def test_grok_witness_is_a_mandatory_non_empty_top_level_group():
+    from logsight_filebeat_spark.entry_queries_corpus import GROK_MULTI_PATTERNS
+    from logsight_filebeat_spark.plans.pipeline import DEFAULT_GROK
+
+    for pattern in (DEFAULT_GROK, *GROK_MULTI_PATTERNS, "%{COMBINEDAPACHELOG}"):
+        assert compile_grok(pattern).witness == 1, pattern
+    cases = {
+        "%{GREEDYDATA:msg}": None,  # can match the empty string
+        "(?:%{WORD:a} )?%{NOTSPACE:b} %{GREEDYDATA:c}": 2,  # optional lead
+        "%{SPACE:s}x%{WORD:w}": 2,  # group 1 has minimum width 0
+        "(?:%{WORD:a} )+%{GREEDYDATA:b}": None,  # repeated, then empty
+        "(%{WORD:a}|%{INT:b})": None,  # alternation at the top level
+        r"req=(%{WORD:req})? %{GREEDYDATA:rest}": None,
+    }
+    for pattern, witness in cases.items():
+        assert compile_grok(pattern).witness == witness, pattern
+
+
+def test_vectorized_grok_null_only_batch_is_null_struct(spark):
+    """An Arrow batch holding only NULL text reaches pyarrow as a null-typed
+    array unless the conversion names the type; extract_regex has no
+    kernel for that, so the task failed instead of returning NULL."""
+    from logsight_filebeat_spark.operators.parse import (
+        compile_grok_set,
+        with_grok_set_vectorized,
+    )
+
+    df = spark.createDataFrame([(None,), (None,)], "t string")
+    single = with_grok_vectorized(df, "t", compile_grok(PAT)).collect()
+    chain = with_grok_set_vectorized(
+        df, "t", compile_grok_set([PAT, "%{GREEDYDATA:rest}"])
+    ).collect()
+    assert [r.parsed for r in single] == [None, None]
+    assert [r.parsed for r in chain] == [None, None]
+
+
 def test_grok_native_no_match_is_null_struct(spark):
     g = compile_grok(PAT)
     df = spark.createDataFrame([("",), ("oneword",)], ["t"])

@@ -61,6 +61,34 @@ def test_flagship_column_path_has_no_python_eval(spark):
         assert marker not in plan, marker
 
 
+def test_flagship_runs_each_grok_and_route_regex_once(spark):
+    """Every grok capture and the route capture is one regexp_extract, and
+    no RLIKE re-runs either regex: the grok match test reads the witness
+    capture and the route value reads its capture. The captures sit in
+    their own Project under the one building ``parsed`` (CollapseProject
+    must not inline a regexp_extract referenced twice), so the CASE WHEN
+    does not evaluate them again."""
+    import re
+
+    flagship = _pages_plan(spark)
+    pg = spark.read.parquet(PAGES)
+    plan = flagship.mapped(pg)._jdf.queryExecution().optimizedPlan().toString()
+
+    def calls(fn, regex):
+        return len(re.findall(fn + r"\(\w+#\d+, " + re.escape(regex) + r"[,)]", plan))
+
+    grok = flagship.grok
+    (rule,) = [r for r in flagship.cfg.routes if r.kind() == "regex"]
+    assert calls("regexp_extract", grok.regex) == len(grok.fields), plan
+    assert calls("RLIKE", grok.regex) == 0, plan
+    assert calls("regexp_extract", rule.regex_matcher) == 1, plan
+    assert calls("RLIKE", rule.regex_matcher) == 0, plan
+    lines = plan.splitlines()
+    (at,) = [i for i, l in enumerate(lines) if " AS parsed#" in l]
+    assert "regexp_extract" not in lines[at], lines[at]
+    assert lines[at + 1].count("regexp_extract(") == len(grok.fields), lines[at + 1]
+
+
 def test_vectorized_grok_is_single_python_stage(spark):
     from logsight_filebeat_spark.operators.parse import (
         compile_grok,

@@ -20,8 +20,14 @@ from logsight_filebeat_spark.operators.parse import (
     with_grok_vectorized,
 )
 
-GROK = compile_grok("%{NOTSPACE:timestamp} %{WORD:level} %{GREEDYDATA:message}")
-ORACLE = re.compile(GROK.regex, re.ASCII)  # RE2/Java class semantics
+# the flagship pattern (witness: group 1); one with no witness group, whose
+# native match test stays an rlike; one whose witness sits behind an optional
+# leading group
+GROKS = [
+    compile_grok("%{NOTSPACE:timestamp} %{WORD:level} %{GREEDYDATA:message}"),
+    compile_grok("%{GREEDYDATA:msg}"),
+    compile_grok("(?:%{WORD:a} )?%{NOTSPACE:b} %{GREEDYDATA:c}"),
+]
 
 # log-ish plus adversarial: whitespace variants, metacharacters, unicode
 line_text = st.text(
@@ -58,24 +64,27 @@ def test_multiline_fast_path_matches_python_oracle(spark, texts):
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(st.lists(line_text, min_size=1, max_size=30))
+@given(st.lists(st.one_of(st.none(), st.just(""), line_text), min_size=1, max_size=30))
 def test_grok_native_and_vectorized_match_python_re(spark, texts):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    native = {
-        r.i: r.p
-        for r in with_grok_native(df, "t", GROK, "p").select("i", "p").collect()
-    }
-    vect = {
-        r.i: r.p
-        for r in with_grok_vectorized(df, "t", GROK, "p").select("i", "p").collect()
-    }
-    for i, t in enumerate(texts):
-        m = ORACLE.search(t)
-        expected = None if m is None else tuple(m.group(g) or "" for g in (1, 2, 3))
-        got_n = None if native[i] is None else tuple(native[i])
-        got_v = None if vect[i] is None else tuple(vect[i])
-        assert got_n == expected, f"native {t!r}"
-        assert got_v == expected, f"vectorized {t!r}"
+    for grok in GROKS:
+        oracle = re.compile(grok.regex, re.ASCII)  # RE2/Java class semantics
+        native = {
+            r.i: r.p
+            for r in with_grok_native(df, "t", grok, "p").select("i", "p").collect()
+        }
+        vect = {
+            r.i: r.p
+            for r in with_grok_vectorized(df, "t", grok, "p").select("i", "p").collect()
+        }
+        groups = range(1, len(grok.fields) + 1)
+        for i, t in enumerate(texts):
+            m = None if t is None else oracle.search(t)
+            expected = None if m is None else tuple(m.group(g) or "" for g in groups)
+            got_n = None if native[i] is None else tuple(native[i])
+            got_v = None if vect[i] is None else tuple(vect[i])
+            assert got_n == expected, f"native {grok.source} {t!r}"
+            assert got_v == expected, f"vectorized {grok.source} {t!r}"
 
 
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))

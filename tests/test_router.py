@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from logsight_filebeat_spark.config import ConfigError, MapperConf, PipelineConfig
-from logsight_filebeat_spark.operators.router import SINK_COL, route, sink_column
+from logsight_filebeat_spark.functions.mappers import key_regex_mapper, string_key_mapper
+from logsight_filebeat_spark.operators.router import SINK_COL, route
 
 
 def test_precedence_regex_over_key_over_constant():
@@ -39,21 +40,21 @@ def test_regex_route(spark):
         [("this is a Test line",), ("no match here",), ("test lower",)],
         ["app"],
     )
-    col = sink_column(
-        df, [MapperConf(key="app", regex_matcher="^.*([T|t]est).*$")], "_q"
+    cfg = PipelineConfig(
+        routes=(MapperConf(key="app", regex_matcher="^.*([T|t]est).*$"),),
+        quarantine_sink="_q",
     )
-    got = [r.s for r in df.select(col.alias("s")).collect()]
+    got = [r[SINK_COL] for r in route(df, cfg).collect()]
     assert got == ["Test", "_q", "test"]
 
 
 def test_key_route_and_constant_fallback(spark):
     df = spark.createDataFrame([("svc-a",), (None,)], ["app"])
-    col = sink_column(
-        df,
-        [MapperConf(key="app"), MapperConf(name="default_app")],
-        "_q",
+    cfg = PipelineConfig(
+        routes=(MapperConf(key="app"), MapperConf(name="default_app")),
+        quarantine_sink="_q",
     )
-    got = [r.s for r in df.select(col.alias("s")).collect()]
+    got = [r[SINK_COL] for r in route(df, cfg).collect()]
     assert got == ["svc-a", "default_app"]
 
 
@@ -70,3 +71,46 @@ def test_no_rules_all_quarantine(spark):
     df = spark.createDataFrame([("x",)], ["app"])
     cfg = PipelineConfig()
     assert route(df, cfg).first()[SINK_COL] == "_quarantine"
+
+
+def test_route_equals_key_regex_mapper_routing(spark):
+    """A regex rule routes on its capture alone (one regexp_extract, no
+    rlike); that must equal routing on key_regex_mapper's value on every
+    failure shape — NULL key, non-string key, missing key, no match, empty
+    capture — with fall-through to the next rule and to quarantine, and
+    rows failed upstream still quarantined."""
+    df = spark.createDataFrame(
+        [
+            (1, "https://h/path/a/here", 7, "app-x", None),
+            (2, None, 7, "app-x", None),  # NULL key ⇒ next rule
+            (3, "no-slash", 7, None, None),  # no match anywhere: quarantine
+            (4, "/path//here", 7, "app-x", None),  # empty capture
+            (5, "https://h/path/b/here", 7, "app-x", "boom"),  # failed row
+            (6, "/path/test/here", None, None, None),  # second rule wins
+            (7, "", 7, None, None),
+        ],
+        "i long, url string, code int, app string, _error string",
+    )
+    rules = (
+        ("url", "https://[^/]*/path/(.+)/here.*"),
+        ("url", ".*/(.*)/.*"),  # the reference's empty-capture fixture
+        ("code", "(7)"),  # non-string key: fails every row
+        ("missing", "(x)"),  # unresolvable key: fails every row
+    )
+    cfg = PipelineConfig(
+        routes=tuple(MapperConf(key=k, regex_matcher=p) for k, p in rules)
+        + (MapperConf(key="app"),),
+        quarantine_sink="_q",
+    )
+    before = F.coalesce(
+        *[key_regex_mapper(df, k, p).value for k, p in rules],
+        string_key_mapper(df, "app").value,
+        F.lit("_q"),
+    )
+    before = F.when(F.col("_error").isNotNull(), F.lit("_q")).otherwise(before)
+    expected = {r.i: r.s for r in df.select("i", before.alias("s")).collect()}
+    out = route(df, cfg)
+    assert out.columns == df.columns + [SINK_COL]  # no leftover temporaries
+    got = {r.i: r[SINK_COL] for r in out.collect()}
+    assert got == expected
+    assert got == {1: "a", 2: "app-x", 3: "_q", 4: "app-x", 5: "_q", 6: "test", 7: "_q"}

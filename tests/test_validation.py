@@ -30,6 +30,11 @@ LEVEL_CASES = [
     ("BoGus", False),
     ("BOGUS", False),
     ("INFOINFO", False),
+    # Go's `$` (and RE2's, in the DuckDB oracles) is the end of text; Java's
+    # also matches before a final line terminator
+    ("INFO\n", False),
+    ("INFO\r\n", False),
+    ("INFO\u2028", False),
     (None, False),
 ]
 
@@ -45,6 +50,7 @@ TS_CASES = [
     ("2022-04-04T09:00:35Z+02:00", False),
     ("2022-04-04", False),
     ("2022-99-99T09:00:35", True),  # shape-valid: the regex checks digits only
+    ("2022-04-04T09:00:35Z\n", False),  # `$` is the end of text, as in Go
     (None, False),
 ]
 
