@@ -1,11 +1,15 @@
 """Mapper-expression compiler — the heart of the engine.
 
 The reference evaluates a tree of row-at-a-time ``Mapper`` objects per event
-(/root/reference/plugin/mapper/mapper.go). Here every mapper compiles ONCE on
-the driver into a pair of Columns — ``value`` (NULL on failure) and ``error``
+(/root/reference/plugin/mapper/mapper.go). Here every mapper compiles on the
+driver into a pair of Columns — ``value`` (NULL on failure) and ``error``
 (NULL on success, message on failure) — so the whole tree executes inside
 Catalyst whole-stage codegen with zero per-row Python. Row failure becomes a
 NULL/err pair that the O13 failure-segregation filter routes to quarantine.
+The mappers read only the input's schema (a DataFrame or its StructType), so
+PipelinePlan compiles them once per input schema and reuses the Columns for
+every batch of that schema, as NewClient wires its tree once
+(plugin/client.go:28-96).
 
 Semantics pinned to the reference (and its tests):
   - ConstantStringMapper (mapper.go:38-44): emit a literal, never fails.
@@ -63,6 +67,10 @@ class Mapped:
         )
 
 
+def _schema(df: DataFrame | T.StructType) -> T.StructType:
+    return df if isinstance(df, T.StructType) else df.schema
+
+
 def _resolve_path(
     schema: T.StructType, path: str
 ) -> tuple[Column | None, T.DataType | None]:
@@ -99,7 +107,7 @@ def constant_mapper(value: str) -> Mapped:
     return Mapped.ok(F.lit(value))
 
 
-def key_mapper(df: DataFrame, key: str) -> Mapped:
+def key_mapper(df: DataFrame | T.StructType, key: str) -> Mapped:
     """KeyMapper (mapper.go:82-92): dotted-path lookup, error when absent.
 
     A path that does not resolve in the schema fails every row (the columnar
@@ -107,7 +115,7 @@ def key_mapper(df: DataFrame, key: str) -> Mapped:
     value at runtime is likewise "key not found" — in MapStr a key holding
     nothing does not exist.
     """
-    col, _ = _resolve_path(df.schema, key)
+    col, _ = _resolve_path(_schema(df), key)
     if col is None:
         return Mapped.fail(f"Key {key} not found in event")
     return Mapped(
@@ -116,14 +124,14 @@ def key_mapper(df: DataFrame, key: str) -> Mapped:
     )
 
 
-def string_guard(df: DataFrame, key: str, mapped: Mapped) -> Mapped:
+def string_guard(df: DataFrame | T.StructType, key: str, mapped: Mapped) -> Mapped:
     """StringMapper.checkString (mapper.go:27-35): non-string ⇒ row error,
     never a cast (mapper_test.go:279-284 — int 4 must fail).
 
     With a typed schema this is a compile-time decision on the column's
     DataType; the runtime NULL/error propagation of ``mapped`` is preserved.
     """
-    _, dtype = _resolve_path(df.schema, key)
+    _, dtype = _resolve_path(_schema(df), key)
     if dtype is None:
         return mapped  # path missing — key_mapper already failed the rows
     if not isinstance(dtype, T.StringType):
@@ -134,13 +142,13 @@ def string_guard(df: DataFrame, key: str, mapped: Mapped) -> Mapped:
     return mapped
 
 
-def string_key_mapper(df: DataFrame, key: str) -> Mapped:
+def string_key_mapper(df: DataFrame | T.StructType, key: str) -> Mapped:
     """StringMapper(KeyMapper) — the composition the reference wires for
     timestamp/message/level keys (plugin/client.go:63-76)."""
     return string_guard(df, key, key_mapper(df, key))
 
 
-def key_regex_mapper(df: DataFrame, key: str, pattern: str) -> Mapped:
+def key_regex_mapper(df: DataFrame | T.StructType, key: str, pattern: str) -> Mapped:
     """KeyRegexMapper (mapper.go:132-163).
 
     Failure cases pinned by mapper_test.go:155-222:
@@ -193,7 +201,7 @@ def wallclock_mapper() -> Mapped:
     return Mapped.ok(F.date_format(F.current_timestamp(), RFC3339_FORMAT))
 
 
-def tags_mapper(df: DataFrame, mapping: dict[str, str]) -> Mapped:
+def tags_mapper(df: DataFrame | T.StructType, mapping: dict[str, str]) -> Mapped:
     """MultipleKeyValueStringMapper (mapper.go:96-130).
 
     For each (out_key → source_key): missing source keys are silently
@@ -204,7 +212,7 @@ def tags_mapper(df: DataFrame, mapping: dict[str, str]) -> Mapped:
     """
     entries = []
     for out_key, source_key in sorted(mapping.items()):
-        col, dtype = _resolve_path(df.schema, source_key)
+        col, dtype = _resolve_path(_schema(df), source_key)
         if col is None or not isinstance(dtype, T.StringType):
             continue  # skip-on-missing / drop-non-string
         entries.append(F.struct(F.lit(out_key).alias("key"), col.alias("value")))

@@ -16,8 +16,12 @@ an unmatched host contributes NO tags, never a NULL tag value.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from logsight_filebeat_spark.operators.stage import Stage
 
 # lookups up to this many rows compile into literal maps (enrich_with_lookup)
 LITERAL_MAP_MAX_ENTRIES = 64
@@ -49,6 +53,7 @@ def enrich_with_lookup(
     tags_col: str = "tags",
     lookup_key: str | None = None,
     max_literal_entries: int | None = LITERAL_MAP_MAX_ENTRIES,
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Enrich from a lookup table, folding selected lookup columns into
     the tags map as {tag_key: value}; rows with no match (or NULL values)
@@ -57,15 +62,18 @@ def enrich_with_lookup(
     ``on``: fact-side join column (name or expression, e.g. url_host()).
     ``tag_cols``: {tag_key_out: lookup_column_in}.
     ``lookup_key``: lookup-side key column (default: same name as ``on``).
+    ``stage``: ``lookup_stage`` of the same arguments, built earlier and
+    reused; without it the stage is built (and the lookup probed) for this
+    call.
 
-    Two physical strategies, picked here on the driver:
+    Two physical strategies, picked by ``lookup_stage`` on the driver:
 
     * **literal map** — when the lookup has ≤ ``max_literal_entries``
       unique-keyed rows (probed with one bounded ``limit(n+1).collect()``
-      at plan-build time), the whole table compiles into ``create_map``
-      literals and the probe is ``element_at`` INSIDE the scan's
-      whole-stage codegen: no join operator, no broadcast exchange, no
-      build side. End-to-end the flagship pipeline times the same either
+      when the stage is built), the whole table compiles into
+      ``create_map`` literals and the probe is ``element_at`` INSIDE the
+      scan's whole-stage codegen: no join operator, no broadcast exchange,
+      no build side. End-to-end the flagship pipeline times the same either
       way at test scale (the broadcast build is tiny); what the literal
       form buys is plan shape — the whole map stage stays ONE shuffle-free
       codegen projection (pinned in test_plans_explain), each STACKED
@@ -75,10 +83,30 @@ def enrich_with_lookup(
       lookups are config-sized, so this is the hot path's default.
     * **broadcast hash join** — anything larger (or duplicate-keyed,
       where join semantics duplicate fact rows and a map cannot), the
-      classic broadcast left join. Pass ``max_literal_entries=None`` to
-      force it.
+      classic broadcast left join, built for each frame it enriches. Pass
+      ``max_literal_entries=None`` to force it.
     """
-    join_col = df[on] if isinstance(on, str) else on
+    if stage is None:
+        stage = lookup_stage(
+            lookup, on, tag_cols, tags_col, lookup_key, max_literal_entries
+        )
+    return stage(df)
+
+
+def lookup_stage(
+    lookup: DataFrame,
+    on: str | Column,
+    tag_cols: dict[str, str],
+    tags_col: str = "tags",
+    lookup_key: str | None = None,
+    max_literal_entries: int | None = LITERAL_MAP_MAX_ENTRIES,
+    rows: list | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``enrich_with_lookup``'s strategy and Columns, built once. The
+    literal-map stage only adds a prebuilt Column, so it names ``on`` with
+    ``F.col`` rather than a frame's resolved attribute; the join stage
+    joins each frame it gets. ``rows``: the lookup's rows when the caller
+    already collected them (any mapping per row) — the probe is skipped."""
     key = lookup_key or (on if isinstance(on, str) else None)
     if key is None:
         raise ValueError("lookup_key required when `on` is an expression")
@@ -86,9 +114,10 @@ def enrich_with_lookup(
     small = lookup.select(*needed)
 
     if max_literal_entries is not None:
-        probe = small.limit(max_literal_entries + 1).collect()
+        probe = rows if rows is not None else small.limit(max_literal_entries + 1).collect()
         keys = [r[key] for r in probe]
         if len(probe) <= max_literal_entries and len(set(keys)) == len(keys):
+            join_col = F.col(on) if isinstance(on, str) else on
             entries = []
             for tag_key, src in sorted(tag_cols.items()):
                 pairs = [
@@ -114,11 +143,7 @@ def enrich_with_lookup(
             new_tags = F.map_concat(
                 F.col(tags_col), F.map_from_entries(arr)
             )
-            return df.withColumn(tags_col, new_tags)
-
-    joined = df.join(
-        F.broadcast(small), join_col == small[key], "left"
-    ).drop(small[key])
+            return Stage().with_column(tags_col, new_tags)
 
     entries = [
         F.struct(F.lit(tag_key).alias("key"), F.col(src).alias("value"))
@@ -126,9 +151,18 @@ def enrich_with_lookup(
     ]
     arr = F.filter(F.array(*entries), lambda e: e.getField("value").isNotNull())
     new_tags = F.map_concat(F.col(tags_col), F.map_from_entries(arr))
-    return joined.withColumn(tags_col, new_tags).drop(
-        *[c for c in set(tag_cols.values()) if c in joined.columns and c not in df.columns]
-    )
+    lookup_only = set(tag_cols.values())
+
+    def join(df: DataFrame) -> DataFrame:
+        join_col = df[on] if isinstance(on, str) else on
+        joined = df.join(
+            F.broadcast(small), join_col == small[key], "left"
+        ).drop(small[key])
+        return joined.withColumn(tags_col, new_tags).drop(
+            *[c for c in lookup_only if c in joined.columns and c not in df.columns]
+        )
+
+    return join
 
 
 def filter_blocked_hosts(

@@ -20,8 +20,11 @@ writeByPartition when both sides are materialized — see sinks/writers.py).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logsight_filebeat_spark.config import DEFAULT_LEVEL, PipelineConfig
 from logsight_filebeat_spark.functions.mappers import (
@@ -32,13 +35,14 @@ from logsight_filebeat_spark.functions.mappers import (
     tags_mapper,
 )
 from logsight_filebeat_spark.functions.validation import valid_level, valid_timestamp
+from logsight_filebeat_spark.operators.stage import Stage
 
 ERROR_COL = "_error"
 LOG_COLUMNS = ("timestamp", "message", "level", "tags")
 
 
 def compile_log_mapper(
-    df: DataFrame, cfg: PipelineConfig, event_ts_col: str = "warc_ts"
+    df: DataFrame | T.StructType, cfg: PipelineConfig, event_ts_col: str = "warc_ts"
 ) -> dict[str, Mapped]:
     """Wire the mapper tree exactly as NewClient does (plugin/client.go:63-87):
 
@@ -62,15 +66,12 @@ def compile_log_mapper(
     return {"timestamp": timestamp, "message": message, "level": level, "tags": tags}
 
 
-def to_log(
-    df: DataFrame, cfg: PipelineConfig, event_ts_col: str = "warc_ts"
-) -> DataFrame:
-    """ToLog as a single projection (O10): adds the four api.Log columns and
-    `_error` (NULL ⇔ row valid). Error precedence matches log_mapper.go:28-56
-    (timestamp → message → level → tags → validateLevel → validateTimestamp).
-    Level is upper-cased BEFORE validation (log_mapper.go:48 then :51).
-    """
-    m = compile_log_mapper(df, cfg, event_ts_col)
+def to_log_stage(
+    schema: T.StructType, cfg: PipelineConfig, event_ts_col: str = "warc_ts"
+) -> Callable[[DataFrame], DataFrame]:
+    """``to_log``'s projection for input of ``schema``, built once: the
+    returned function only adds the prebuilt Columns to a frame."""
+    m = compile_log_mapper(schema, cfg, event_ts_col)
     level_value = F.upper(m["level"].value)
     mapper_error = F.coalesce(
         m["timestamp"].error, m["message"].error, m["level"].error, m["tags"].error
@@ -85,14 +86,31 @@ def to_log(
             F.lit("timestamp must be in ISO 8601 format"),  # api/log.go:47-54
         ),
     )
-    return df.select(
-        "*",
+    return Stage().select(
+        F.col("*"),
         m["timestamp"].value.alias("timestamp"),
         m["message"].value.alias("message"),
         level_value.alias("level"),
         m["tags"].value.alias("tags"),
         F.coalesce(mapper_error, validation_error).alias(ERROR_COL),
     )
+
+
+def to_log(
+    df: DataFrame,
+    cfg: PipelineConfig,
+    event_ts_col: str = "warc_ts",
+    stage: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """ToLog as a single projection (O10): adds the four api.Log columns and
+    `_error` (NULL ⇔ row valid). Error precedence matches log_mapper.go:28-56
+    (timestamp → message → level → tags → validateLevel → validateTimestamp).
+    Level is upper-cased BEFORE validation (log_mapper.go:48 then :51).
+
+    ``stage``: ``to_log_stage(df.schema, cfg, event_ts_col)`` built earlier
+    and reused; without it the projection is built for this call.
+    """
+    return (stage or to_log_stage(df.schema, cfg, event_ts_col))(df)
 
 
 def split_ok_failed(mapped: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -29,12 +29,14 @@ field ⇒ capture-group index is positional).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from logsight_filebeat_spark.operators.stage import Stage
 
 # public grok base vocabulary (subset); internals non-capturing. Entries may
 # reference other entries with %{NAME} / %{NAME:field} — compile_grok expands
@@ -792,20 +794,36 @@ def multiline_join(
     return folded.cast("array<string>")
 
 
+def multiline_stage(
+    text_col: str = "text", out_col: str = "event_text",
+    continuation: str = DEFAULT_CONTINUATION,
+    negate: bool = False, match: str = "after",
+    max_lines: int | None = None, flush_pattern: str | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``explode_multiline``'s Columns, built once: the returned function
+    only adds them to a frame."""
+    events = multiline_join(
+        text_col, continuation, negate, match, max_lines, flush_pattern
+    )
+    return Stage().select(F.col("*"), F.posexplode(events).alias("event_idx", out_col))
+
+
 def explode_multiline(
     df: DataFrame, text_col: str = "text", out_col: str = "event_text",
     continuation: str = DEFAULT_CONTINUATION,
     negate: bool = False, match: str = "after",
     max_lines: int | None = None, flush_pattern: str | None = None,
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """pages → one row per logical event, event index preserved (the
-    harvester emitting events per file, filebeat/main.go:27-30)."""
-    events = multiline_join(
-        text_col, continuation, negate, match, max_lines, flush_pattern
-    )
-    return df.select(
-        "*", F.posexplode(events).alias("event_idx", out_col)
-    )
+    harvester emitting events per file, filebeat/main.go:27-30).
+    ``stage``: ``multiline_stage`` of the same arguments, built earlier and
+    reused."""
+    if stage is None:
+        stage = multiline_stage(
+            text_col, out_col, continuation, negate, match, max_lines, flush_pattern
+        )
+    return stage(df)
 
 
 # ---------------------------------------------------------------------------
@@ -813,10 +831,21 @@ def explode_multiline(
 # ---------------------------------------------------------------------------
 
 def with_grok_native(
-    df: DataFrame, col: str, grok: CompiledGrok, out: str = "parsed"
+    df: DataFrame, col: str, grok: CompiledGrok, out: str = "parsed",
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Adds ``out``: one struct of captures, NULL when the regex does not
     match (the row failure of mapper.go:145-150 — NOT an empty string).
+    ``stage``: ``grok_native_stage`` of the same arguments, built earlier
+    and reused (likewise for the other ``with_grok_*``)."""
+    return (stage or grok_native_stage(col, grok, out))(df)
+
+
+def grok_native_stage(
+    col: str, grok: CompiledGrok, out: str = "parsed"
+) -> Callable[[DataFrame], DataFrame]:
+    """``with_grok_native``'s Columns, built once: the returned function
+    only adds them to a frame.
 
     Each field is one ``regexp_extract`` projected into its own temporary
     column, so every capture runs once per row; the match test then reads
@@ -829,15 +858,15 @@ def with_grok_native(
     temporaries are dropped before returning."""
     caps = [f"__{out}_g{i}" for i in range(len(grok.fields))]
     c = F.col(col)
-    mid = df.withColumns(
-        {t: F.regexp_extract(c, grok.regex, i + 1) for i, t in enumerate(caps)}
-    )
+    captures = {t: F.regexp_extract(c, grok.regex, i + 1) for i, t in enumerate(caps)}
     if grok.witness is None:
         matched = c.rlike(grok.regex)
     else:
         matched = F.col(caps[grok.witness - 1]) != ""
-    struct = F.struct(*[F.col(t).alias(f) for t, f in zip(caps, grok.fields)])
-    return mid.withColumn(out, F.when(matched, struct)).drop(*caps)
+    parsed = F.when(
+        matched, F.struct(*[F.col(t).alias(f) for t, f in zip(caps, grok.fields)])
+    )
+    return Stage().with_columns(captures).with_column(out, parsed).drop(*caps)
 
 
 def grok_set_native(col: Column | str, gs: CompiledGrokSet) -> tuple[Column, Column]:
@@ -872,12 +901,20 @@ def grok_set_native(col: Column | str, gs: CompiledGrokSet) -> tuple[Column, Col
 
 
 def with_grok_set_native(
-    df: DataFrame, col: str, gs: CompiledGrokSet, out: str = "parsed"
+    df: DataFrame, col: str, gs: CompiledGrokSet, out: str = "parsed",
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Adds ``out`` (union-schema capture struct, NULL = no pattern matched)
     and ``out + PATTERN_IDX_SUFFIX`` (int index of the winning pattern)."""
+    return (stage or grok_set_native_stage(col, gs, out))(df)
+
+
+def grok_set_native_stage(
+    col: str, gs: CompiledGrokSet, out: str = "parsed"
+) -> Callable[[DataFrame], DataFrame]:
+    """``with_grok_set_native``'s Columns, built once."""
     struct, idx = grok_set_native(col, gs)
-    return df.withColumn(out, struct).withColumn(out + PATTERN_IDX_SUFFIX, idx)
+    return Stage().with_column(out, struct).with_column(out + PATTERN_IDX_SUFFIX, idx)
 
 
 # ---------------------------------------------------------------------------
@@ -885,11 +922,21 @@ def with_grok_set_native(
 # ---------------------------------------------------------------------------
 
 def with_grok_vectorized(
-    df: DataFrame, col: str, grok: CompiledGrok, out: str = "parsed"
+    df: DataFrame, col: str, grok: CompiledGrok, out: str = "parsed",
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Single mapInPandas stage applying the precompiled pattern once per row
-    over Arrow batches (north rule: batched re2-style matchers; no per-row
-    Python *interpretation* — the regex engine is C). All pre/post logic
+    """Adds ``out`` as ``with_grok_native`` does, over Arrow batches in a
+    Python worker (``grok_vectorized_stage``)."""
+    return (stage or grok_vectorized_stage(col, grok, out))(df)
+
+
+def grok_vectorized_stage(
+    col: str, grok: CompiledGrok, out: str = "parsed"
+) -> Callable[[DataFrame], DataFrame]:
+    """``with_grok_vectorized``'s Columns, built once. Single mapInPandas
+    stage applying the precompiled pattern once per row over Arrow batches
+    (north rule: batched re2-style matchers; no per-row Python
+    *interpretation* — the regex engine is C). All pre/post logic
     stays in Columns; this is the only JVM→Python hop in the pipeline
     (SURVEY §4.2). Fields come back as a struct column, NULL on no-match —
     byte-identical to with_grok_native and to the single-threaded oracle.
@@ -958,9 +1005,8 @@ def with_grok_vectorized(
             cols["ok"] = ok
             return pd.DataFrame(cols)
 
-    extract = F.pandas_udf(extract_fn, ret_t)
+    extract = F.pandas_udf(extract_fn, ret_t)(F.col(col))
     tmp = f"__{out}_x"
-    mid = df.withColumn(tmp, extract(F.col(col)))
     struct = F.when(
         F.col(f"{tmp}.ok"),
         F.struct(
@@ -970,15 +1016,25 @@ def with_grok_vectorized(
             ]
         ),
     )
-    return mid.withColumn(out, struct).drop(tmp)
+    return Stage().with_column(tmp, extract).with_column(out, struct).drop(tmp)
 
 
 def with_grok_set_vectorized(
-    df: DataFrame, col: str, gs: CompiledGrokSet, out: str = "parsed"
+    df: DataFrame, col: str, gs: CompiledGrokSet, out: str = "parsed",
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Grok-set fallback chain on the Arrow path: ONE Python hop. Per
-    batch, pattern i only runs over rows the first i patterns left
-    unmatched (the remaining-mask shrinks monotonically, so total regex
+    """Adds ``out`` and ``out + PATTERN_IDX_SUFFIX`` as
+    ``with_grok_set_native`` does, over Arrow batches in a Python worker
+    (``grok_set_vectorized_stage``)."""
+    return (stage or grok_set_vectorized_stage(col, gs, out))(df)
+
+
+def grok_set_vectorized_stage(
+    col: str, gs: CompiledGrokSet, out: str = "parsed"
+) -> Callable[[DataFrame], DataFrame]:
+    """``with_grok_set_vectorized``'s Columns, built once. Grok-set
+    fallback chain on the Arrow path: ONE Python hop. Per batch, pattern i
+    only runs over rows the first i patterns left unmatched (the remaining-mask shrinks monotonically, so total regex
     work ≈ one pass over the batch plus the residue) — same cost shape as
     the reference trying patterns in order, but batched. Unmatched groups
     of matched rows fill '' (native regexp_extract parity); fields the
@@ -1049,9 +1105,8 @@ def with_grok_set_vectorized(
         cols["idx"] = idx
         return pd.DataFrame(cols)
 
-    extract = F.pandas_udf(extract_fn, ret_t)
+    extract = F.pandas_udf(extract_fn, ret_t)(F.col(col))
     tmp = f"__{out}_x"
-    mid = df.withColumn(tmp, extract(F.col(col)))
     struct = F.when(
         F.col(f"{tmp}.idx").isNotNull(),
         F.struct(
@@ -1062,8 +1117,10 @@ def with_grok_set_vectorized(
         ),
     )
     return (
-        mid.withColumn(out, struct)
-        .withColumn(out + PATTERN_IDX_SUFFIX, F.col(f"{tmp}.idx"))
+        Stage()
+        .with_column(tmp, extract)
+        .with_column(out, struct)
+        .with_column(out + PATTERN_IDX_SUFFIX, F.col(f"{tmp}.idx"))
         .drop(tmp)
     )
 

@@ -4,34 +4,41 @@ Reference: makeLogsight (/root/reference/plugin/logsight.go:19-64) parses and
 validates config, NewClient (/root/reference/plugin/client.go:28-96) wires the
 mapper tree once, SuccessNet/WithBackoff fix the physical batch/retry policy.
 All of that happens on the driver, before any event flows — we keep exactly
-that split: ``compile()`` raises every config error eagerly and builds Column
-expressions; ``run_batch()`` is the hot path (plugin/client.go:112-129).
+that split: ``compile()`` raises every config error eagerly and copies small
+lookups to the driver; the first batch of each input schema builds every
+map-stage layer's Columns, which later batches of that schema reuse;
+``run_batch()`` is the hot path (plugin/client.go:112-129).
 
 Dataflow per batch (all-Column except the optional vectorized grok stage):
 
   scan(pages) → [multiline explode] → grok parse → to_log (map + validate)
-  → enrich (broadcast joins) → route → ONE persisted DF
-  → routed write (partitioned by batch_id, sink)
+  → enrich (literal maps, or broadcast joins over 64 rows) → route
+    (each layer applies the Columns cached for ``pages.schema``)
+  → ONE persisted DF → routed write (Spark, partitioned by batch_id, sink)
   → ONE collected (sink, hour) aggregate → on the driver: metrics rows,
-    per-sink receipts, ACK totals → metrics + receipts writes (partitioned
-    by batch_id) → lineage marker renamed into place (the ACK)
+    per-sink receipts, ACK totals → metrics + receipts written from the
+    driver as one parquet file each into their batch_id partition
+  → lineage marker renamed into place (the ACK)
 
 Scale notes: the persist before fan-out avoids rescanning the parse stage per
 sink (§4.3); the aggregate is a single low-cardinality hash agg whose few
-hundred rows are all the driver needs for receipts and totals; every write
-overwrites its batch_id partition, so reruns are idempotent; the lineage
-check and commit are single FileSystem calls, not Spark jobs.
+hundred rows are all the driver needs for receipts and totals, so a batch
+runs three Spark jobs (the routed write, the aggregate's shuffle map and its
+collect); every write replaces its batch_id partition, so reruns are
+idempotent; the lineage check and commit are single FileSystem calls.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field, replace
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from logsight_filebeat_spark.config import PipelineConfig
@@ -40,16 +47,17 @@ from logsight_filebeat_spark.operators.aggregate import sink_hour_aggregates
 from logsight_filebeat_spark.operators.enrich import (
     LITERAL_MAP_MAX_ENTRIES,
     enrich_with_lookup,
+    lookup_stage,
     url_host,
 )
-from logsight_filebeat_spark.operators.log_mapper import ERROR_COL, to_log
+from logsight_filebeat_spark.operators.log_mapper import ERROR_COL, to_log, to_log_stage
 from logsight_filebeat_spark.operators.parse import (
     CompiledGrok,
     CompiledGrokSet,
     compile_grok,
     compile_grok_set,
 )
-from logsight_filebeat_spark.operators.router import SINK_COL, route
+from logsight_filebeat_spark.operators.router import SINK_COL, route, route_stage
 from logsight_filebeat_spark.sinks import lineage as lineage_ops
 from logsight_filebeat_spark.sinks.writers import write_routed
 
@@ -65,9 +73,32 @@ class Lookup:
     on: object  # str column name or Column expression
     tag_cols: dict[str, str]
     lookup_key: str | None = None
+    # the table's rows, when compile() copied them to the driver (_pin_small)
+    _rows: list[dict] | None = field(default=None, init=False, repr=False, compare=False)
 
 
-@dataclass
+# (grok is a pattern list, vectorized) → (operator, stage builder) in parse_ops;
+# looked up by name on each call, so wrappers set on parse_ops (tracing) apply
+_GROK_OPS = {
+    (False, False): ("with_grok_native", "grok_native_stage"),
+    (False, True): ("with_grok_vectorized", "grok_vectorized_stage"),
+    (True, False): ("with_grok_set_native", "grok_set_native_stage"),
+    (True, True): ("with_grok_set_vectorized", "grok_set_vectorized_stage"),
+}
+
+
+@dataclass(frozen=True)
+class _MapStages:
+    """Every map-stage layer's Columns for one input schema."""
+
+    multiline: Callable[[DataFrame], DataFrame] | None
+    grok: Callable[[DataFrame], DataFrame]
+    to_log: Callable[[DataFrame], DataFrame]
+    lookups: tuple[Callable[[DataFrame], DataFrame], ...]
+    route: Callable[[DataFrame], DataFrame]
+
+
+@dataclass(frozen=True)  # frozen: _stages is built from these fields
 class PipelinePlan:
     cfg: PipelineConfig
     # a single pattern or a first-match-wins fallback chain (heterogeneous
@@ -77,35 +108,63 @@ class PipelinePlan:
     vectorized: bool = False  # grok via mapInPandas instead of native Columns
     lookups: list[Lookup] = field(default_factory=list)
     event_ts_col: str = "warc_ts"
+    # one entry per input schema, built on the first batch of that schema
+    _stages: dict[T.StructType, _MapStages] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     # ---- logical plan (no actions) -------------------------------------
     def parsed(self, pages: DataFrame) -> DataFrame:
-        df = pages
-        if self.multiline:
-            df = parse_ops.explode_multiline(df, "text", "event_text")
-            src = "event_text"
-        else:
-            src = "text"
-        if isinstance(self.grok, CompiledGrokSet):
-            if self.vectorized:
-                return parse_ops.with_grok_set_vectorized(
-                    df, src, self.grok, "parsed"
-                )
-            return parse_ops.with_grok_set_native(df, src, self.grok, "parsed")
-        if self.vectorized:
-            df = parse_ops.with_grok_vectorized(df, src, self.grok, "parsed")
-        else:
-            df = parse_ops.with_grok_native(df, src, self.grok, "parsed")
-        return df
+        return self._parsed(pages, self._stages_for(pages))
 
     def mapped(self, pages: DataFrame) -> DataFrame:
-        df = self.parsed(pages)
-        df = to_log(df, self.cfg, event_ts_col=self.event_ts_col)
-        for lk in self.lookups:
+        """The map stage over ``pages``. Each layer's operator runs once per
+        call, but only applies the Columns built for ``pages.schema``."""
+        st = self._stages_for(pages)
+        df = self._parsed(pages, st)
+        df = to_log(df, self.cfg, event_ts_col=self.event_ts_col, stage=st.to_log)
+        for lk, stage in zip(self.lookups, st.lookups, strict=True):
             df = enrich_with_lookup(
-                df, lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key
+                df, lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key, stage=stage
             )
-        return route(df, self.cfg)
+        return route(df, self.cfg, stage=st.route)
+
+    def _parsed(self, pages: DataFrame, st: _MapStages) -> DataFrame:
+        df, src = pages, "text"
+        if self.multiline:
+            df = parse_ops.explode_multiline(df, "text", "event_text", stage=st.multiline)
+            src = "event_text"
+        op = getattr(parse_ops, self._grok_ops()[0])
+        return op(df, src, self.grok, "parsed", stage=st.grok)
+
+    def _grok_ops(self) -> tuple[str, str]:
+        return _GROK_OPS[isinstance(self.grok, CompiledGrokSet), self.vectorized]
+
+    def _stages_for(self, pages: DataFrame) -> _MapStages:
+        """The map stage's Columns for ``pages.schema``, built on the first
+        batch of that schema. A layer's Columns depend on the schema of its
+        input, which this finds by applying the layers before it."""
+        key = pages.schema
+        st = self._stages.get(key)
+        if st is not None:
+            return st
+        df, src, multiline = pages, "text", None
+        if self.multiline:
+            multiline = parse_ops.multiline_stage("text", "event_text")
+            df, src = multiline(df), "event_text"
+        grok = getattr(parse_ops, self._grok_ops()[1])(src, self.grok, "parsed")
+        df = grok(df)
+        log = to_log_stage(df.schema, self.cfg, self.event_ts_col)
+        df = log(df)
+        lookups = []
+        for lk in self.lookups:
+            lookups.append(lookup_stage(
+                lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key, rows=lk._rows
+            ))
+            df = lookups[-1](df)
+        st = _MapStages(multiline, grok, log, tuple(lookups), route_stage(df.schema, self.cfg))
+        self._stages[key] = st
+        return st
 
     # ---- physical execution (actions) ----------------------------------
     def run_batch(
@@ -152,11 +211,9 @@ class PipelinePlan:
             routed.unpersist()
 
         byte_total = sum(agg.column(_ACK_BYTES).to_pylist())
-        metrics = agg.drop_columns([_ACK_BYTES])
-        metrics = metrics.append_column(
-            "batch_id", pa.array([batch_id] * metrics.num_rows, pa.string())
+        lineage_ops.write_batch_table(
+            spark, root, "metrics", batch_id, agg.drop_columns([_ACK_BYTES])
         )
-        _overwrite_batch(spark.createDataFrame(metrics), root, "metrics")
 
         by_sink = agg.group_by(SINK_COL).aggregate(
             [("event_count", "sum"), ("failed_count", "sum")]
@@ -164,18 +221,16 @@ class PipelinePlan:
         sinks = by_sink.column(SINK_COL).to_pylist()
         failed = by_sink.column("failed_count_sum").to_pylist()
         ok = [n - f for n, f in zip(by_sink.column("event_count_sum").to_pylist(), failed)]
-        receipts = pa.table({  # cast to RECEIPTS_SCHEMA by createDataFrame
-            "receipt_id": [
-                hashlib.sha256(f"{batch_id}|{s}".encode("utf-8")).hexdigest() for s in sinks
-            ],
-            "sink": sinks,
-            "logs_count": ok,
-            "batch_id": [batch_id] * len(sinks),
-            "status": [200 if f == 0 else 207 for f in failed],
+        receipts = pa.table({  # RECEIPTS_SCHEMA's columns but the partition's
+            "receipt_id": pa.array(
+                [hashlib.sha256(f"{batch_id}|{s}".encode("utf-8")).hexdigest() for s in sinks],
+                pa.string(),
+            ),
+            "sink": pa.array(sinks, pa.string()),
+            "logs_count": pa.array(ok, pa.int64()),
+            "status": pa.array([200 if f == 0 else 207 for f in failed], pa.int32()),
         })
-        _overwrite_batch(
-            spark.createDataFrame(receipts, lineage_ops.RECEIPTS_SCHEMA), root, "receipts"
-        )
+        lineage_ops.write_batch_table(spark, root, "receipts", batch_id, receipts)
 
         rows_ok, rows_failed = sum(ok), sum(failed)
         lineage_ops.commit_batch(  # the ACK — after data is durable
@@ -188,14 +243,6 @@ class PipelinePlan:
             "rows_failed": rows_failed,
             "byte_total": byte_total,
         }
-
-
-def _overwrite_batch(rows: DataFrame, root: str, table: str) -> None:
-    """Write a batch's few rows of ``table`` as one file, replacing whatever
-    an earlier (crashed) run of the same batch left in its partition."""
-    rows.coalesce(1).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch_id").parquet(os.path.join(root, table))
 
 
 def compile(
@@ -231,17 +278,18 @@ def compile(
 
 
 def _pin_small(lookup: Lookup) -> Lookup:
-    """Copy a lookup small enough for enrich's literal-map path into a
-    driver-local relation, once. ``mapped`` probes every lookup each time it
-    builds a batch's plan; on a local relation that probe runs no Spark job.
-    Like the reference's config, the copy is taken at compile time. Larger
-    lookups stay as given (broadcast join)."""
+    """Copy a lookup small enough for enrich's literal-map path to the
+    driver, once: its rows build the literal maps without a probe, and its
+    table becomes a driver-local relation. Like the reference's config, the
+    copy is taken at compile time. Larger lookups stay as given (broadcast
+    join)."""
     table = lookup.table
     rows = table.limit(LITERAL_MAP_MAX_ENTRIES + 1).toArrow()
     if rows.num_rows > LITERAL_MAP_MAX_ENTRIES:
         return lookup
-    local = table.sparkSession.createDataFrame(rows, table.schema)
-    return replace(lookup, table=local)
+    pinned = replace(lookup, table=table.sparkSession.createDataFrame(rows, table.schema))
+    pinned._rows = rows.to_pylist()
+    return pinned
 
 
 def standard_pages_config(sink_root: str = "") -> PipelineConfig:

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logsight_filebeat_spark.operators.router import SINK_COL
+from logsight_filebeat_spark.sinks import lineage
 
 LOG_SINK_COLUMNS = ("timestamp", "message", "level", "tags")
 
@@ -53,6 +54,10 @@ def write_routed(
 
 
 def read_sink(spark, sink_root: str, sink: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sink_root, "routed")).filter(
+    """One sink's rows of the committed batches: a batch whose run crashed
+    before its lineage marker is not read, even when its rows are on disk."""
+    routed = spark.read.parquet(os.path.join(sink_root, "routed")).filter(
         F.col(SINK_COL) == sink
     )
+    committed = lineage.read_lineage(spark, sink_root).select("batch_id")
+    return lineage.only_committed(routed, committed)

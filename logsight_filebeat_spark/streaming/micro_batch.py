@@ -8,8 +8,11 @@ module closes the loop with Structured Streaming: a file-source readStream
 tails the pages directory (the harvester — new files are discovered and
 offset-tracked by the streaming checkpoint, exactly the registrar's job), and
 ``foreachBatch`` hands each micro-batch to PipelinePlan.run_batch, which
-overwrites the batch's partition of routed data, metrics and receipts and
-then renames its lineage marker into place (the ACK).
+overwrites the batch's partition of routed data (a Spark write), replaces
+its metrics and receipts partitions (one driver-written file each), and
+then renames its lineage marker into place (the ACK). The plan's map-stage
+Columns are built on the first micro-batch and reused by the rest, since
+every micro-batch of the stream has the same schema.
 
 Delivery is exactly-once from either side alone — the streaming checkpoint
 replays an epoch only if it did not commit, and run_batch's marker guard +

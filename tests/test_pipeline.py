@@ -186,9 +186,8 @@ def test_crash_after_any_write_reruns_exactly_once(
 ):
     """A crash right after any write of run_batch, then a rerun of the same
     batch id, leaves every table equal to one clean run: the rerun replaces
-    the batch's partitions instead of appending to them."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
+    the batch's partitions instead of appending to them. The metrics and
+    receipts are written from the driver (``write_batch_table``)."""
     from logsight_filebeat_spark.plans import pipeline
 
     def then_crash(fn):
@@ -202,14 +201,14 @@ def test_crash_after_any_write_reruns_exactly_once(
     elif step == "marker":
         monkeypatch.setattr(lineage_ops, "commit_batch", then_crash(lineage_ops.commit_batch))
     else:
-        parquet = DataFrameWriter.parquet
+        write = lineage_ops.write_batch_table
 
-        def crash_on_table(writer, path, *args, **kwargs):
-            parquet(writer, path, *args, **kwargs)
-            if path.endswith(step):
+        def crash_on_table(spark, root, table, *args, **kwargs):
+            write(spark, root, table, *args, **kwargs)
+            if table == step:
                 raise _Crash(step)
 
-        monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_table)
+        monkeypatch.setattr(lineage_ops, "write_batch_table", crash_on_table)
 
     root = str(tmp_path / "sinks")
     with pytest.raises(_Crash):
@@ -272,6 +271,86 @@ def test_new_checkpoint_on_a_shared_sink_publishes_its_files(plan, spark, tmp_pa
         assert q.exception() is None
     assert spark.read.parquet(f"{sink}/routed").count() == expected
     assert len({r.batch_id for r in lineage_ops.read_lineage(spark, sink).collect()}) == 2
+
+
+@pytest.mark.parametrize("step", ["routed", "receipts"])
+def test_readers_skip_a_crashed_stream_batch(plan, spark, tmp_path, monkeypatch, step):
+    """A stream crashes right after a write of its batch; the same file is
+    then drained under a new checkpoint, which publishes it under a new
+    batch id. The crashed batch's rows stay on disk, but it never
+    committed, so the readers return the file's rows once."""
+    from logsight_filebeat_spark.plans import pipeline
+    from logsight_filebeat_spark.sinks.writers import read_sink
+    from logsight_filebeat_spark.streaming.micro_batch import run_stream
+
+    pg = pages(spark, 200, seed=24)
+    pg.coalesce(1).write.parquet(str(tmp_path / "in"))
+    want = plan.mapped(pg)
+    sink = str(tmp_path / "sink")
+
+    def crash_after(fn, table=None):
+        def wrapper(*args, **kwargs):
+            fn(*args, **kwargs)
+            if table is None or args[2] == table:
+                raise _Crash(step)
+        return wrapper
+
+    if step == "routed":
+        monkeypatch.setattr(pipeline, "write_routed", crash_after(pipeline.write_routed))
+    else:
+        monkeypatch.setattr(
+            lineage_ops, "write_batch_table", crash_after(lineage_ops.write_batch_table, step)
+        )
+    q = run_stream(spark, plan, str(tmp_path / "in"), sink, checkpoint_dir=str(tmp_path / "ck1"))
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+    monkeypatch.undo()
+    q = run_stream(spark, plan, str(tmp_path / "in"), sink, checkpoint_dir=str(tmp_path / "ck2"))
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+
+    on_disk = spark.read.parquet(f"{sink}/routed")
+    assert on_disk.count() == 2 * want.count()  # the crashed batch's rows too
+    [committed] = [r.batch_id for r in lineage_ops.read_lineage(spark, sink).collect()]
+    sinks = [r.sink for r in want.select("sink").distinct().collect()]
+    for name in sinks:
+        got = read_sink(spark, sink, name)
+        assert got.count() == want.filter(F.col("sink") == name).count(), name
+        assert {r.batch_id for r in got.select("batch_id").distinct().collect()} == {committed}
+    receipts = lineage_ops.read_receipts(spark, sink).collect()
+    assert {r.batch_id for r in receipts} == {committed}
+    ok = F.sum(F.when(F.col("_error").isNull(), 1).otherwise(0))
+    assert {r.sink: r.logs_count for r in receipts} == dict(
+        want.groupBy("sink").agg(ok).collect()
+    )
+
+
+def test_batch_ids_spark_escapes_round_trip(plan, spark, tmp_path):
+    """The driver writes metrics and receipts into the same escaped
+    ``batch_id=<v>`` directories as the Spark-written routed table, so each
+    reads back with the batch id it was published under."""
+    import os
+
+    root = str(tmp_path / "sinks")
+    ids = ["hour-2024-01-01 10", "a:b/c", "k=v"]
+    for i, bid in enumerate(ids):
+        plan.run_batch(spark, pages(spark, 60, seed=40 + i), bid, sink_root=root)
+
+    def dirs(table):
+        return sorted(os.listdir(f"{root}/{table}"))
+
+    routed_dirs = [d for d in dirs("routed") if d.startswith("batch_id=")]
+    assert len(routed_dirs) == len(ids)
+    for table in ("metrics", "receipts"):
+        assert [d for d in dirs(table) if not d.startswith(".")] == routed_dirs
+        got = spark.read.parquet(f"{root}/{table}")
+        assert sorted(r.batch_id for r in got.select("batch_id").distinct().collect()) == sorted(ids)
+    assert sorted(
+        r.batch_id for r in spark.read.parquet(f"{root}/routed").select("batch_id").distinct().collect()
+    ) == sorted(ids)
+    assert sorted(
+        r.batch_id for r in lineage_ops.read_receipts(spark, root).select("batch_id").distinct().collect()
+    ) == sorted(ids)
 
 
 def test_compile_rejects_bad_route():
