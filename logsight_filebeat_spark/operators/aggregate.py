@@ -14,12 +14,15 @@ a second pass over the data.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logsight_filebeat_spark.operators.log_mapper import ERROR_COL
 from logsight_filebeat_spark.operators.router import SINK_COL
+from logsight_filebeat_spark.operators.stage import Stage
 
 
 def hour_bucket(ts: Column | str = "warc_ts") -> Column:
@@ -32,28 +35,43 @@ def sink_hour_aggregates(
     ts_col: str = "warc_ts",
     bytes_cols: tuple[str, ...] = ("message",),
     extra_aggs: tuple[Column, ...] = (),
+    stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """(sink, hour) → event_count, byte_total, failed_count,
     parse_failure_rate. Quarantined/failed rows count into the same buckets
     (failure rate per hour is the point), byte totals count delivered payload
     bytes only — the receipt measures what was shipped. ``extra_aggs`` ride
-    along in the same aggregation, placed before parse_failure_rate."""
+    along in the same aggregation, placed before parse_failure_rate.
+    ``stage``: ``sink_hour_stage`` of the same arguments, built earlier and
+    reused."""
+    return (stage or sink_hour_stage(routed.schema, ts_col, bytes_cols, extra_aggs))(routed)
+
+
+def sink_hour_stage(
+    schema: T.StructType,
+    ts_col: str = "warc_ts",
+    bytes_cols: tuple[str, ...] = ("message",),
+    extra_aggs: tuple[Column, ...] = (),
+) -> Stage:
+    """``sink_hour_aggregates``' Columns and operations for input frames
+    of ``schema``, built once."""
     byte_expr = sum(
         (F.coalesce(F.octet_length(F.col(c)), F.lit(0)) for c in bytes_cols),
         F.lit(0),
     )
-    is_failed = F.col(ERROR_COL).isNotNull() if ERROR_COL in routed.columns else F.lit(False)
+    is_failed = F.col(ERROR_COL).isNotNull() if ERROR_COL in schema.names else F.lit(False)
     return (
-        routed.groupBy(
-            F.col(SINK_COL), hour_bucket(ts_col).alias("hour_bucket")
+        Stage()
+        .group_agg(
+            [F.col(SINK_COL), hour_bucket(ts_col).alias("hour_bucket")],
+            [
+                F.count(F.lit(1)).alias("event_count"),
+                F.sum(F.when(~is_failed, byte_expr).otherwise(F.lit(0))).alias("byte_total"),
+                F.sum(F.when(is_failed, 1).otherwise(0)).alias("failed_count"),
+                *extra_aggs,
+            ],
         )
-        .agg(
-            F.count(F.lit(1)).alias("event_count"),
-            F.sum(F.when(~is_failed, byte_expr).otherwise(F.lit(0))).alias("byte_total"),
-            F.sum(F.when(is_failed, 1).otherwise(0)).alias("failed_count"),
-            *extra_aggs,
-        )
-        .withColumn(
+        .with_column(
             "parse_failure_rate",
             F.round(F.col("failed_count") / F.col("event_count"), 6),
         )

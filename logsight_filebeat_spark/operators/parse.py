@@ -14,13 +14,14 @@ owns them natively:
 * Grok — a pattern like ``%{NOTSPACE:timestamp} %{WORD:level}
   %{GREEDYDATA:message}`` compiles ONCE on the driver into (a) a Java regex
   for the native Column path (regexp_extract per field, whole-stage codegen)
-  and (b) the Arrow-vectorized ``mapInPandas`` path: pyarrow's
-  ``extract_regex`` — a true RE2 engine in C over the Arrow buffers, zero
-  per-row Python — which is the north rule's "batched re2-style matchers"
-  literally (RE2 is also the reference's Go regexp dialect). Patterns RE2
-  can't compile (probed at compile time) fall back to precompiled Python
-  ``re`` over the same batches. All paths are tested byte-identical against
-  a single-threaded Python oracle (input_hint invariant).
+  and (b) the Arrow-vectorized path, one scalar ``arrow_udf`` over the text
+  column (``grok_arrow_stage``, no pandas): pyarrow's ``extract_regex`` —
+  a true RE2 engine in C over the Arrow buffers, zero per-row Python —
+  which is the north rule's "batched re2-style matchers" literally (RE2 is
+  also the reference's Go regexp dialect). Patterns RE2 can't compile
+  (probed at compile time) run precompiled Python ``re`` per row over the
+  same batches. All paths are tested byte-identical against a
+  single-threaded Python oracle (input_hint invariant).
 
 Grok base patterns are the public grok vocabulary (non-capturing internals so
 field ⇒ capture-group index is positional).
@@ -29,9 +30,12 @@ field ⇒ capture-group index is positional).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -191,18 +195,16 @@ def _named_regex(regex: str) -> str:
 
 
 def _arrow_re2_ok(named_regex: str) -> bool:
-    """True iff pyarrow is importable AND RE2 compiles the pattern (probed
-    on an empty array — compilation errors surface eagerly). Decided once on
-    the driver; workers then take the C path unconditionally. Patterns using
-    constructs RE2 lacks (lookaround, backrefs) probe False and fall back to
-    the Python-`re` pandas path — same results, slower engine."""
+    """True iff pyarrow's RE2 compiles the pattern (probed on an empty
+    array — compilation errors surface eagerly). Decided once on the
+    driver; workers then take the C path unconditionally. Patterns using
+    constructs RE2 lacks (lookaround, backrefs) probe False and run Python
+    ``re`` in the Arrow executor (``grok_arrow_stage``) — same results,
+    slower engine."""
     try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         pc.extract_regex(pa.array([], type=pa.string()), pattern=named_regex)
         return True
-    except Exception:
+    except pa.ArrowInvalid:
         return False
 
 
@@ -918,7 +920,7 @@ def grok_set_native_stage(
 
 
 # ---------------------------------------------------------------------------
-# grok execution — Arrow-vectorized path (mapInPandas)
+# grok execution — Arrow-vectorized path (one scalar arrow_udf)
 # ---------------------------------------------------------------------------
 
 def with_grok_vectorized(
@@ -933,90 +935,10 @@ def with_grok_vectorized(
 def grok_vectorized_stage(
     col: str, grok: CompiledGrok, out: str = "parsed"
 ) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_vectorized``'s Columns, built once. Single mapInPandas
-    stage applying the precompiled pattern once per row over Arrow batches
-    (north rule: batched re2-style matchers; no per-row Python
-    *interpretation* — the regex engine is C). All pre/post logic
-    stays in Columns; this is the only JVM→Python hop in the pipeline
-    (SURVEY §4.2). Fields come back as a struct column, NULL on no-match —
-    byte-identical to with_grok_native and to the single-threaded oracle.
-
-    Hot-path shape: ONE extraction pass per batch, preferring pyarrow's
-    ``extract_regex`` — a true RE2 engine running in C over the Arrow
-    buffers (zero per-row Python, and RE2 IS the reference's dialect). The
-    result struct's validity bitmap is the match test; non-participating
-    optional groups of matched rows come back '' from RE2 — exactly the
-    native path's regexp_extract semantics, so byte-identity holds for
-    every pattern shape. Patterns RE2 can't compile (probed at compile
-    time) fall back to pandas ``str.extract`` with a sentinel whole-match
-    group: group 0 participates in every match, so NaN there ⇔ no match
-    even when a field group is optional (ADVICE r01: the old NaN-in-group-1
-    signal nulled whole matched rows for optional fields), and '' fill
-    restores non-participating-group parity.
-
-    The Python hop is a SCALAR pandas_udf over the text column returning a
-    struct, not mapInPandas: only the text bytes cross the Arrow boundary
-    (every passenger column — urls, indexes — stays JVM-side) and the
-    captures come back as ONE struct column. Measured 2.2× faster than the
-    mapInPandas form that round-tripped whole rows (0.33s vs 0.72s over
-    600k events on 8 cores) and within ~10% of the pure-JVM native path —
-    the Arrow passenger traffic, not the regex, was the cost."""
-    import pandas as pd
-
-    regex = grok.regex
-    named = grok.named_regex
-    use_arrow = grok.arrow_re2
-    nf = len(grok.fields)
-    ret_t = T.StructType(
-        [T.StructField(f"g{i}", T.StringType()) for i in range(nf)]
-        + [T.StructField("ok", T.BooleanType())]
-    )
-
-    if use_arrow:
-        # NOTE: no type hints on extract_fn — pandas_udf rejects the
-        # Series -> DataFrame hint pair even though a StructType return
-        # legitimately yields a DataFrame; the explicit returnType governs
-        def extract_fn(s):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            st = pc.extract_regex(
-                pa.Array.from_pandas(s, type=pa.string()), pattern=named
-            )
-            cols = {
-                f"g{i}": st.field(f"g{i}").to_pandas() for i in range(nf)
-            }
-            cols["ok"] = pc.is_valid(st).to_pandas()
-            return pd.DataFrame(cols)
-
-    else:
-        # fallback: Python re engine; re.ASCII = RE2/Java class semantics
-        # (see CompiledGrok.python) so captures stay byte-identical to the
-        # native Column path on non-ASCII input. Sentinel group shifts the
-        # field groups to 2..n+1 in this pattern only.
-        pat = re.compile(f"({regex})", re.ASCII)
-
-        def extract_fn(s):
-            ext = s.str.extract(pat)  # one C-vectorized pass
-            ok = ext.iloc[:, 0].notna()  # sentinel: always participates
-            ext = ext.fillna("")  # non-participating field in a matched
-            # row ⇒ '' (native parity); unmatched rows masked by ok anyway
-            cols = {f"g{i}": ext.iloc[:, i + 1] for i in range(nf)}
-            cols["ok"] = ok
-            return pd.DataFrame(cols)
-
-    extract = F.pandas_udf(extract_fn, ret_t)(F.col(col))
-    tmp = f"__{out}_x"
-    struct = F.when(
-        F.col(f"{tmp}.ok"),
-        F.struct(
-            *[
-                F.col(f"{tmp}.g{i}").alias(f)
-                for i, f in enumerate(grok.fields)
-            ]
-        ),
-    )
-    return Stage().with_column(tmp, extract).with_column(out, struct).drop(tmp)
+    """``with_grok_vectorized``'s Columns, built once: the Arrow grok
+    executor (``grok_arrow_stage``) with one pattern, without the pattern
+    index column."""
+    return grok_arrow_stage(col, (grok,), grok.fields, out)
 
 
 def with_grok_set_vectorized(
@@ -1032,97 +954,103 @@ def with_grok_set_vectorized(
 def grok_set_vectorized_stage(
     col: str, gs: CompiledGrokSet, out: str = "parsed"
 ) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_set_vectorized``'s Columns, built once. Grok-set
-    fallback chain on the Arrow path: ONE Python hop. Per batch, pattern i
-    only runs over rows the first i patterns left unmatched (the remaining-mask shrinks monotonically, so total regex
-    work ≈ one pass over the batch plus the residue) — same cost shape as
-    the reference trying patterns in order, but batched. Unmatched groups
-    of matched rows fill '' (native regexp_extract parity); fields the
-    winning pattern lacks stay NULL; the pattern index column is NULL on
-    no match. Like with_grok_vectorized, the hop is a SCALAR pandas_udf
-    over the text column returning one struct — passenger columns stay
-    JVM-side."""
-    nf = len(gs.fields)
+    """``with_grok_set_vectorized``'s Columns, built once: the Arrow grok
+    executor (``grok_arrow_stage``) over the set's patterns, with the
+    pattern index column."""
+    return grok_arrow_stage(
+        col, gs.patterns, gs.fields, out, index_col=out + PATTERN_IDX_SUFFIX
+    )
+
+
+def grok_arrow_stage(
+    col: str,
+    patterns: tuple[CompiledGrok, ...],
+    fields: tuple[str, ...],
+    out: str = "parsed",
+    index_col: str | None = None,
+) -> Stage:
+    """The Arrow grok executor: ONE scalar ``arrow_udf`` from the text
+    column (a ``pa.Array``) to a struct of captures and the winning
+    pattern's index. Only the text crosses to the Python worker — every
+    other column stays JVM-side — and no pandas conversion happens on
+    either side of the regex. It is the only JVM→Python hop in the
+    pipeline (SURVEY §4.2).
+
+    Per Arrow batch, patterns run first-match-wins: pattern i runs only
+    over the rows patterns 0..i-1 left unmatched, and keeps its hits. The
+    hits of every pattern and the unmatched residue are concatenated and
+    put back in input order with one ``sort_indices`` + ``take``.
+
+    A pattern RE2 compiles (``CompiledGrok.arrow_re2``, decided on the
+    driver) runs pyarrow's ``extract_regex``, RE2 in C over the Arrow
+    buffers: the result's validity is the match test, and a group that did
+    not take part comes back '' — the native path's ``regexp_extract``
+    semantics. Any other pattern (lookaround, backreferences) runs Python
+    ``re`` with ``re.ASCII`` (``CompiledGrok.python``), a ``search`` per
+    row, with '' for a group that did not take part. Either way a matched
+    row carries '' for its pattern's missing groups and NULL for the
+    ``fields`` its pattern lacks; ``out`` is NULL where no pattern matched,
+    and so is ``index_col`` when given."""
+    nf = len(fields)
+    # per pattern: RE2 pattern or None, Python pattern or None, and for each
+    # output field the pattern's capture index (None: pattern lacks it)
+    specs = [
+        (
+            g.named_regex if g.arrow_re2 else None,
+            None if g.arrow_re2 else g.python,
+            tuple(g.fields.index(f) if f in g.fields else None for f in fields),
+        )
+        for g in patterns
+    ]
+    names = [f"g{i}" for i in range(nf)] + ["idx"]
     ret_t = T.StructType(
-        [T.StructField(f"g{i}", T.StringType()) for i in range(nf)]
+        [T.StructField(n, T.StringType()) for n in names[:nf]]
         + [T.StructField("idx", T.IntegerType())]
     )
-    # per-pattern engine choice, decided on the driver: RE2-in-C when the
-    # pattern compiles under RE2, Python re otherwise (mixed sets work)
-    specs = [
-        (g.regex, g.named_regex if g.arrow_re2 else None, g.fields)
-        for g in gs.patterns
-    ]
-    union_fields = gs.fields
 
-    def extract_fn(s):
-        import pandas as pd
-
-        if any(named for _, named, _ in specs):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-        # sentinel whole-match group on the fallback engine (see
-        # with_grok_vectorized): extract column 0 doubles as the match test
-        pats = [
-            (named, re.compile(f"({rx})", re.ASCII) if named is None else None, flds)
-            for rx, named, flds in specs
-        ]
-        idx = pd.Series(pd.NA, index=s.index, dtype="Int32")
-        vals = {
-            f: pd.Series(pd.NA, index=s.index, dtype=object)
-            for f in union_fields
-        }
-        remaining = s.index
-        for i, (named, pat, flds) in enumerate(pats):
-            if len(remaining) == 0:
+    def extract(text: pa.Array) -> pa.Array:
+        pos = pa.array(np.arange(len(text), dtype=np.int32))
+        parts = []  # (input positions, output columns): hits, then residue
+        for i, (named, pattern, slots) in enumerate(specs):
+            if len(text) == 0:
                 break
-            sub = s.loc[remaining]
-            if named is not None:  # RE2 C path
-                st = pc.extract_regex(
-                    pa.Array.from_pandas(sub, type=pa.string()), pattern=named
-                )
-                ok = pc.is_valid(st).to_pandas()
-                ok.index = sub.index
-                hit = remaining[ok.to_numpy()]
-                if len(hit):
-                    for j, f in enumerate(flds):
-                        v = st.field(f"g{j}").to_pandas()
-                        v.index = sub.index
-                        vals[f].loc[hit] = v.loc[hit]
-                    idx.loc[hit] = i
-            else:  # Python re fallback
-                ext = sub.str.extract(pat)
-                ok = ext.iloc[:, 0].notna()
-                hit = remaining[ok.to_numpy()]
-                if len(hit):
-                    ext = ext.loc[hit].fillna("")
-                    for j, f in enumerate(flds):
-                        vals[f].loc[hit] = ext.iloc[:, j + 1]
-                    idx.loc[hit] = i
-            remaining = remaining[(~ok).to_numpy()]
-        cols = {f"g{i}": vals[f] for i, f in enumerate(union_fields)}
-        cols["idx"] = idx
-        return pd.DataFrame(cols)
+            if named is not None:
+                st = pc.extract_regex(text, pattern=named)
+                ok = pc.is_valid(st)
+                hits = st.filter(ok)
+                caps = [hits.field(k) for k in range(hits.type.num_fields)]
+            else:
+                ms = [None if t is None else pattern.search(t) for t in text.to_pylist()]
+                ok = pa.array([m is not None for m in ms])
+                hits = [m for m in ms if m is not None]
+                caps = [
+                    pa.array([m.group(k + 1) or "" for m in hits], pa.string())
+                    for k in range(pattern.groups)
+                ]
+            n = len(hits)
+            parts.append((pos.filter(ok), [
+                pa.nulls(n, pa.string()) if k is None else caps[k] for k in slots
+            ] + [pa.array(np.full(n, i, dtype=np.int32))]))
+            miss = pc.invert(ok)
+            text, pos = text.filter(miss), pos.filter(miss)
+        parts.append((pos, [pa.nulls(len(pos), pa.string())] * nf + [pa.nulls(len(pos), pa.int32())]))
+        order = pc.sort_indices(pa.concat_arrays([p for p, _ in parts]))
+        return pa.StructArray.from_arrays(
+            [pa.concat_arrays([c[j] for _, c in parts]).take(order) for j in range(nf + 1)],
+            names=names,
+        )
 
-    extract = F.pandas_udf(extract_fn, ret_t)(F.col(col))
     tmp = f"__{out}_x"
-    struct = F.when(
-        F.col(f"{tmp}.idx").isNotNull(),
-        F.struct(
-            *[
-                F.col(f"{tmp}.g{i}").alias(f)
-                for i, f in enumerate(union_fields)
-            ]
-        ),
+    idx = F.col(f"{tmp}.idx")
+    stage = Stage().with_column(tmp, F.arrow_udf(extract, ret_t)(F.col(col))).with_column(
+        out,
+        F.when(idx.isNotNull(), F.struct(*[
+            F.col(f"{tmp}.{g}").alias(f) for g, f in zip(names, fields)
+        ])),
     )
-    return (
-        Stage()
-        .with_column(tmp, extract)
-        .with_column(out, struct)
-        .with_column(out + PATTERN_IDX_SUFFIX, F.col(f"{tmp}.idx"))
-        .drop(tmp)
-    )
+    if index_col is not None:
+        stage = stage.with_column(index_col, idx)
+    return stage.drop(tmp)
 
 
 def log_templates(

@@ -35,6 +35,11 @@ class Stage:
     def with_column(self, name: str, col: Column) -> Stage:
         return self._add("withColumn", name, col._jc)
 
+    def group_agg(self, keys: list[Column], aggs: list[Column]) -> Stage:
+        """``groupBy(*keys).agg(*aggs)``."""
+        self._add("groupBy", _seq(keys))
+        return self._add("agg", aggs[0]._jc, _seq(aggs[1:]))
+
     def drop(self, *names: str) -> Stage:
         return self._add("drop", _seq(names))
 

@@ -6,7 +6,8 @@ mapper tree once, SuccessNet/WithBackoff fix the physical batch/retry policy.
 All of that happens on the driver, before any event flows — we keep exactly
 that split: ``compile()`` raises every config error eagerly and copies small
 lookups to the driver; the first batch of each input schema builds every
-map-stage layer's Columns, which later batches of that schema reuse;
+map-stage layer's Columns and the batch's (sink, hour) aggregate, which
+later batches of that schema reuse;
 ``run_batch()`` is the hot path (plugin/client.go:112-129).
 
 Dataflow per batch (all-Column except the optional vectorized grok stage):
@@ -43,7 +44,7 @@ from pyspark.storagelevel import StorageLevel
 
 from logsight_filebeat_spark.config import PipelineConfig
 from logsight_filebeat_spark.operators import parse as parse_ops
-from logsight_filebeat_spark.operators.aggregate import sink_hour_aggregates
+from logsight_filebeat_spark.operators.aggregate import sink_hour_aggregates, sink_hour_stage
 from logsight_filebeat_spark.operators.enrich import (
     LITERAL_MAP_MAX_ENTRIES,
     enrich_with_lookup,
@@ -89,13 +90,15 @@ _GROK_OPS = {
 
 @dataclass(frozen=True)
 class _MapStages:
-    """Every map-stage layer's Columns for one input schema."""
+    """Every map-stage layer's Columns for one input schema, and
+    ``run_batch``'s (sink, hour) aggregate over the routed rows."""
 
     multiline: Callable[[DataFrame], DataFrame] | None
     grok: Callable[[DataFrame], DataFrame]
     to_log: Callable[[DataFrame], DataFrame]
     lookups: tuple[Callable[[DataFrame], DataFrame], ...]
     route: Callable[[DataFrame], DataFrame]
+    sink_hour: Callable[[DataFrame], DataFrame]
 
 
 @dataclass(frozen=True)  # frozen: _stages is built from these fields
@@ -105,7 +108,7 @@ class PipelinePlan:
     # corpora: one pattern per line format, Beats' multi-pattern config)
     grok: CompiledGrok | CompiledGrokSet
     multiline: bool = True
-    vectorized: bool = False  # grok via mapInPandas instead of native Columns
+    vectorized: bool = False  # grok via one Arrow UDF instead of native Columns
     lookups: list[Lookup] = field(default_factory=list)
     event_ts_col: str = "warc_ts"
     # one entry per input schema, built on the first batch of that schema
@@ -141,9 +144,10 @@ class PipelinePlan:
         return _GROK_OPS[isinstance(self.grok, CompiledGrokSet), self.vectorized]
 
     def _stages_for(self, pages: DataFrame) -> _MapStages:
-        """The map stage's Columns for ``pages.schema``, built on the first
-        batch of that schema. A layer's Columns depend on the schema of its
-        input, which this finds by applying the layers before it."""
+        """The map stage's Columns for ``pages.schema``, and the aggregate
+        over its routed rows, built on the first batch of that schema. A
+        layer's Columns depend on the schema of its input, which this finds
+        by applying the layers before it."""
         key = pages.schema
         st = self._stages.get(key)
         if st is not None:
@@ -162,7 +166,16 @@ class PipelinePlan:
                 lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key, rows=lk._rows
             ))
             df = lookups[-1](df)
-        st = _MapStages(multiline, grok, log, tuple(lookups), route_stage(df.schema, self.cfg))
+        route_st = route_stage(df.schema, self.cfg)
+        # the ACK's byte_total counts every row's message, failed too
+        sink_hour = sink_hour_stage(
+            route_st(df).schema,
+            ts_col=self.event_ts_col,
+            extra_aggs=(
+                F.sum(F.coalesce(F.octet_length("message"), F.lit(0))).alias(_ACK_BYTES),
+            ),
+        )
+        st = _MapStages(multiline, grok, log, tuple(lookups), route_st, sink_hour)
         self._stages[key] = st
         return st
 
@@ -199,13 +212,8 @@ class PipelinePlan:
                 partition_cols=("batch_id", SINK_COL),
                 target_file_rows=self.cfg.batch_size * 1000,
             )
-            # the ACK's byte_total counts every row's message, failed too
             agg = sink_hour_aggregates(
-                routed,
-                ts_col=self.event_ts_col,
-                extra_aggs=(
-                    F.sum(F.coalesce(F.octet_length("message"), F.lit(0))).alias(_ACK_BYTES),
-                ),
+                routed, stage=self._stages_for(pages).sink_hour
             ).toArrow()
         finally:
             routed.unpersist()

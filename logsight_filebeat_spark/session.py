@@ -5,7 +5,18 @@ Scale stance: these configs are chosen for a multi-executor cluster reading
 AQE (runtime re-planning, skew-join splitting, partition coalescing), Arrow
 batching for the single vectorized parse stage, and a shuffle-partition count
 sized to the local core count (on a real cluster this is set per-job from
-input size / target partition bytes).
+input size / target partition bytes) — except the Python-worker daemon.
+
+Python workers are forked from ``logsight_filebeat_spark.pyworker`` instead
+of ``pyspark.daemon``. Stock pyspark re-reads the directory of every zip on
+the worker's ``sys.path`` at the start of every task, once per importer, and
+importing pyspark from ``pyspark.zip`` makes a dozen or more: tens of ms
+of Python CPU per task before a row moves, which dominated the Arrow grok
+stage. The package's daemon re-reads an archive only when it has changed
+(see that module). The JVM starts the daemon as ``python -m <module>`` from its own
+working directory, so the package's parent directory goes on the workers'
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged with any value the
+caller passes), or a session started elsewhere could not run a Python UDF.
 """
 
 from __future__ import annotations
@@ -14,6 +25,10 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package, for the Python workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
 
 # Arrow batch size for the vectorized parse stage (SURVEY §4.2): big enough to
 # amortize the JVM->Python hop, small enough that a batch of pages with large
@@ -111,6 +126,14 @@ def get_spark(
         m = re.fullmatch(r"local\[([^\],]+)\]", master)
         if m:
             builder = builder.master(f"local[{m.group(1)},{attempts}]")
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    paths = [_PACKAGE_PARENT] + [
+        p for p in extra_conf.pop(_PYTHONPATH_CONF, "").split(os.pathsep)
+        if p and p != _PACKAGE_PARENT
+    ]
+    builder = builder.config(
+        "spark.python.daemon.module", "logsight_filebeat_spark.pyworker"
+    ).config(_PYTHONPATH_CONF, os.pathsep.join(paths))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

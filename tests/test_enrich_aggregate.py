@@ -94,6 +94,23 @@ def test_sink_hour_aggregates_and_failure_rate(spark):
     assert agg[1].parse_failure_rate == 0.0
 
 
+def test_sink_hour_stage_serves_every_frame_of_its_schema(spark):
+    """One prebuilt stage, applied to two frames of the same schema, gives
+    what a fresh ``sink_hour_aggregates`` gives for each."""
+    from logsight_filebeat_spark.operators.aggregate import sink_hour_stage
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "sink: string, warc_ts: string, message: string, _error: string") \
+            .withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+    a = frame([("s1", "2024-03-01 10:05:00", "hello", None), ("s2", "2024-03-01 11:00:00", None, "x")])
+    b = frame([("s3", "2024-03-02 09:00:00", "abcd", None)])
+    assert a.schema == b.schema
+    stage = sink_hour_stage(a.schema)
+    for df in (a, b):
+        assert sorted(stage(df).collect()) == sorted(sink_hour_aggregates(df).collect())
+
+
 def test_receipts_status_codes(spark):
     df = spark.createDataFrame(
         [("s1", None), ("s1", "err"), ("s2", None)],

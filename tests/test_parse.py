@@ -419,6 +419,106 @@ def test_grok_set_vectorized_equals_native(spark):
     assert sum(1 for _, p in native.values() if p is None) == 40
 
 
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """Sets the Arrow batch size for one test, then restores it."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+
+    def set_rows(n: int) -> None:
+        spark.conf.set(key, str(n))
+
+    yield set_rows
+    spark.conf.set(key, before)
+
+
+def _oracle_set(gs, t):
+    """First-match-wins over the Python patterns: (fields, pattern index)."""
+    for i, g in enumerate(gs.patterns):
+        m = None if t is None else g.python.search(t)
+        if m is not None:
+            caps = dict(zip(g.fields, (x or "" for x in m.groups())))
+            return tuple(caps.get(f) for f in gs.fields), i
+    return None, None
+
+
+def test_arrow_grok_restores_row_order_across_batches(spark, arrow_batch_rows):
+    """Hits of pattern 0 (RE2), pattern 1 (Python ``re``: RE2 rejects its
+    lookahead) and pattern 2 (RE2) interleave with unmatched and NULL rows
+    inside every 5-row Arrow batch of one partition. The executor gathers
+    each pattern's hits apart, so a row paired with another row's captures
+    shows up here."""
+    from logsight_filebeat_spark.operators.parse import (
+        compile_grok_set,
+        with_grok_set_native,
+        with_grok_set_vectorized,
+    )
+
+    gs = compile_grok_set(
+        [
+            "%{IP:client} %{INT:status}",
+            "%{BANGWORD:w}! %{GREEDYDATA:rest}",
+            "%{WORD:a} %{GREEDYDATA:rest}",
+        ],
+        {"BANGWORD": r"\w+(?=!)"},
+    )
+    assert [g.arrow_re2 for g in gs.patterns] == [True, False, True]
+    shapes = [
+        lambda i: f"10.0.{i}.7 {200 + i}",
+        lambda i: f"bang{i}! tail {i}",
+        lambda i: f"w{i} rest {i}",
+        lambda i: f"~~ {i}",
+        lambda i: None,
+    ]
+    # a shape cycle of 5 against batches of 5 would put each shape at one
+    # offset in every batch; a cycle of 7 moves them around
+    rows = [(i, shapes[(i * 3) % 7 % 5](i)) for i in range(63)]
+    df = spark.createDataFrame(rows, "i long, t string").coalesce(1)
+    arrow_batch_rows(5)
+    vect = {
+        r.i: (None if r.parsed is None else tuple(r.parsed), r.parsed_pattern)
+        for r in with_grok_set_vectorized(df, "t", gs).collect()
+    }
+    native = {
+        r.i: (None if r.parsed is None else tuple(r.parsed), r.parsed_pattern)
+        for r in with_grok_set_native(df, "t", gs).collect()
+    }
+    assert vect == {i: _oracle_set(gs, t) for i, t in rows}
+    assert vect == native
+    assert {p for _, p in vect.values()} == {0, 1, 2, None}
+
+
+def test_arrow_grok_empty_partitions_and_all_null_batch(spark, arrow_batch_rows):
+    """Partitions with no rows, and an Arrow batch whose text is all NULL
+    between batches that match, run through both vectorized operators."""
+    from logsight_filebeat_spark.operators.parse import (
+        compile_grok_set,
+        with_grok_set_vectorized,
+    )
+
+    gs = compile_grok_set([PAT, "%{IP:client} %{INT:status}"])
+    g = compile_grok(PAT)
+    texts = ["2024-03-01T10:00:00Z INFO up", "10.0.0.1 200", None, None, "nothing"]
+    rows = list(enumerate(texts))
+    arrow_batch_rows(2)  # batches: [hit, hit], [NULL, NULL], [miss]
+    for df in (
+        spark.createDataFrame(rows, "i long, t string").coalesce(1),
+        spark.createDataFrame(rows, "i long, t string").repartition(12),
+    ):
+        single = {r.i: r.parsed for r in with_grok_vectorized(df, "t", g).collect()}
+        assert single == {
+            0: ("2024-03-01T10:00:00Z", "INFO", "up"), 1: None, 2: None, 3: None, 4: None
+        }
+        chain = {
+            r.i: (None if r.parsed is None else tuple(r.parsed), r.parsed_pattern)
+            for r in with_grok_set_vectorized(df, "t", gs).collect()
+        }
+        assert chain == {i: _oracle_set(gs, t) for i, t in rows}
+    empty = spark.createDataFrame([], "i long, t string").repartition(3)
+    assert with_grok_set_vectorized(empty, "t", gs).collect() == []
+    assert with_grok_vectorized(empty, "t", g).collect() == []
+
+
 def test_compile_dissect_and_errors():
     from logsight_filebeat_spark.operators.parse import CompiledDissect, compile_dissect
 

@@ -145,15 +145,17 @@ def test_each_layer_operator_runs_once_per_batch(spark, tmp_path, monkeypatch):
     for name in ("explode_multiline", "with_grok_native", "with_grok_vectorized",
                  "with_grok_set_native", "with_grok_set_vectorized"):
         count(parse_ops, name)
-    for name in ("to_log", "enrich_with_lookup", "route"):
+    for name in ("to_log", "enrich_with_lookup", "route", "sink_hour_aggregates",
+                 "sink_hour_stage"):
         count(pipeline, name)
 
     for i in range(2):
         plan.run_batch(spark, pages(spark, 100, seed=35 + i), f"b{i}", sink_root=root)
 
+    # the (sink, hour) aggregate is applied per batch, but built with the map stage
     assert {k: len(v) for k, v in calls.items()} == {
         "explode_multiline": 2, "with_grok_native": 2, "to_log": 2,
-        "enrich_with_lookup": 4, "route": 2,
+        "enrich_with_lookup": 4, "route": 2, "sink_hour_aggregates": 2,
     }
     assert all(args[3] == "parsed" for args in calls["with_grok_native"])
     assert [args[3] for args in calls["enrich_with_lookup"]] == [

@@ -103,11 +103,18 @@ def test_vectorized_grok_is_single_python_stage(spark):
     plan = _formatted(out)
     import re
 
-    # exactly ONE Python stage, and it is the SCALAR pandas_udf form
+    # exactly ONE Python stage, and it is the SCALAR arrow_udf form
     # (ArrowEvalPython over the text column) — mapInPandas would round-trip
     # every passenger column through Arrow (measured 2.2x slower)
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
     assert "MapInPandas" not in plan
+    # eval type 250 is a scalar arrow_udf (200 would be a pandas_udf)
+    from pyspark.util import PythonEvalType
+
+    assert re.search(
+        rf"Arguments: \[extract\(event_text#\d+\)#\d+\], .*, {PythonEvalType.SQL_SCALAR_ARROW_UDF}\n",
+        plan,
+    )
     # only the text column enters the Python stage
     arrow_line = [
         l for l in plan.splitlines() if "ArrowEvalPython" in l and "(" in l
