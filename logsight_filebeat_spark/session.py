@@ -5,7 +5,8 @@ Scale stance: these configs are chosen for a multi-executor cluster reading
 AQE (runtime re-planning, skew-join splitting, partition coalescing), Arrow
 batching for the single vectorized parse stage, and a shuffle-partition count
 sized to the local core count (on a real cluster this is set per-job from
-input size / target partition bytes) — except the Python-worker daemon.
+input size / target partition bytes) — except the Python-worker daemon and
+the local file system.
 
 Python workers are forked from ``logsight_filebeat_spark.pyworker`` instead
 of ``pyspark.daemon``. Stock pyspark re-reads the directory of every zip on
@@ -17,6 +18,21 @@ stage. The package's daemon re-reads an archive only when it has changed
 working directory, so the package's parent directory goes on the workers'
 ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged with any value the
 caller passes), or a session started elsewhere could not run a Python UDF.
+
+``file:`` paths go through ``logsight_filebeat_spark.jvm.NioLocalFileSystem``
+(``spark.hadoop.fs.file.impl`` and ``fs.AbstractFileSystem.file.impl``).
+pyspark ships no ``libhadoop``, so Hadoop's stock local file system starts a
+``chmod`` process for every file and directory it creates and a ``readlink``
+process for every ``FileContext`` rename: 44 and 24 per stream micro-batch,
+about 3 ms each, a fifth of a small batch. The package's file system makes
+the same system calls in-process through ``java.nio`` and is otherwise
+Hadoop's checksummed ``LocalFileSystem`` (same ``.crc`` files, same layout).
+Its compiled jar, ``jvm/localfs.jar``, goes first on the driver's and the
+executors' ``extraClassPath``, merged with any value the caller passes. A
+class path is fixed when its JVM starts: in a process whose driver JVM is
+already running (spark-submit, or a stopped session built elsewhere), pass
+the jar at launch (``--driver-class-path``) or the first ``file:`` access
+fails with ``ClassNotFoundException``.
 """
 
 from __future__ import annotations
@@ -28,7 +44,25 @@ from pyspark.sql import SparkSession
 
 # the directory holding this package, for the Python workers' import path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+# jvm/NioLocalFileSystem.java, compiled (tools/build_localfs_jar.sh)
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+
+# path-list confs whose first entry the package needs; a caller's entries are
+# kept after it
+_PATH_CONFS = {
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+    "spark.driver.extraClassPath": LOCALFS_JAR,
+    # executors read the same spark.hadoop.* settings, so a cluster executor
+    # writing a file: path needs the classes too
+    "spark.executor.extraClassPath": LOCALFS_JAR,
+}
+_LOCAL_FS = "logsight_filebeat_spark.jvm.NioLocalFileSystem"
+# the package's non-stock parts (see the module docstring)
+_PACKAGE_CONF = {
+    "spark.python.daemon.module": "logsight_filebeat_spark.pyworker",
+    "spark.hadoop.fs.file.impl": _LOCAL_FS,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_LOCAL_FS}$Fs",
+}
 
 # Arrow batch size for the vectorized parse stage (SURVEY §4.2): big enough to
 # amortize the JVM->Python hop, small enough that a batch of pages with large
@@ -127,13 +161,11 @@ def get_spark(
         if m:
             builder = builder.master(f"local[{m.group(1)},{attempts}]")
     extra_conf = dict(extra_conf or {})
-    paths = [_PACKAGE_PARENT] + [
-        p for p in extra_conf.pop(_PYTHONPATH_CONF, "").split(os.pathsep)
-        if p and p != _PACKAGE_PARENT
-    ]
-    builder = builder.config(
-        "spark.python.daemon.module", "logsight_filebeat_spark.pyworker"
-    ).config(_PYTHONPATH_CONF, os.pathsep.join(paths))
+    for k, v in _PACKAGE_CONF.items():
+        builder = builder.config(k, v)
+    for k, first in _PATH_CONFS.items():
+        rest = [p for p in extra_conf.pop(k, "").split(os.pathsep) if p and p != first]
+        builder = builder.config(k, os.pathsep.join([first] + rest))
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -420,8 +420,12 @@ def test_get_spark_rewrites_local_master_for_retries():
     """local[N] hardcodes maxFailures=1 and ignores spark.task.maxFailures;
     get_spark must emit the local[N,F] master form so the retry budget
     exists in local runs too. Assert on the builder's staged options (no
-    new JVM: the shared session fixture must stay the active context)."""
-    from logsight_filebeat_spark.session import get_spark
+    new JVM: the shared session fixture must stay the active context).
+    Every session also gets the package's local file system, whose jar goes
+    first on the class paths without dropping the caller's entries."""
+    import os
+
+    from logsight_filebeat_spark.session import LOCALFS_JAR, get_spark
 
     import pyspark.sql.session as _s
 
@@ -450,15 +454,30 @@ def test_get_spark_rewrites_local_master_for_retries():
         _s.SparkSession.builder = orig
     assert out["master"] == "local[4,21]"
     assert out["spark.task.maxFailures"] == "21"
+    fs = "logsight_filebeat_spark.jvm.NioLocalFileSystem"
+    assert out["spark.hadoop.fs.file.impl"] == fs
+    assert out["spark.hadoop.fs.AbstractFileSystem.file.impl"] == f"{fs}$Fs"
+    assert out["spark.driver.extraClassPath"] == LOCALFS_JAR
+    assert out["spark.executor.extraClassPath"] == LOCALFS_JAR
     # non-local masters keep the conf only (cluster scheduler honors it)
     staged.clear()
     try:
         _s.SparkSession.builder = FakeBuilder()  # type: ignore[assignment]
-        out = get_spark(master="spark://host:7077", max_retries=2)
+        out = get_spark(
+            master="spark://host:7077", max_retries=2,
+            extra_conf={
+                "spark.driver.extraClassPath": os.pathsep.join(["/jars/a.jar", LOCALFS_JAR]),
+                "spark.executor.extraClassPath": "/jars/b.jar",
+            },
+        )
     finally:
         _s.SparkSession.builder = orig
     assert out["master"] == "spark://host:7077"
     assert out["spark.task.maxFailures"] == "3"
+    # the caller's class path is kept beside the jar, which stays first
+    assert out["spark.driver.extraClassPath"] == os.pathsep.join([LOCALFS_JAR, "/jars/a.jar"])
+    assert out["spark.executor.extraClassPath"] == os.pathsep.join([LOCALFS_JAR, "/jars/b.jar"])
+    assert out["spark.hadoop.fs.file.impl"] == fs
 
 
 def test_read_receipts_lenient_on_missing_and_corrupt(plan, spark, tmp_path):
