@@ -8,20 +8,25 @@ owns them natively:
 
 * ``multiline_join`` — continuation lines (default: leading whitespace, the
   stack-trace shape) merge into the preceding event. Implemented with Spark
-  higher-order functions (split + aggregate fold) — fully JVM-side, per-page,
-  no cross-row state, no Python. At 100 TB this is a narrow map over the scan.
+  higher-order functions — fully JVM-side, per-page, no cross-row state, no
+  Python. The default config is one regex split on event boundaries; every
+  other config (negate, before-mode, max_lines, flush_pattern) runs one
+  ``F.aggregate`` fold. At 100 TB this is a narrow map over the scan.
 
 * Grok — a pattern like ``%{NOTSPACE:timestamp} %{WORD:level}
-  %{GREEDYDATA:message}`` compiles ONCE on the driver into (a) a Java regex
-  for the native Column path (regexp_extract per field, whole-stage codegen)
-  and (b) the Arrow-vectorized path, one scalar ``arrow_udf`` over the text
-  column (``grok_arrow_stage``, no pandas): pyarrow's ``extract_regex`` —
-  a true RE2 engine in C over the Arrow buffers, zero per-row Python —
-  which is the north rule's "batched re2-style matchers" literally (RE2 is
-  also the reference's Go regexp dialect). Patterns RE2 can't compile
-  (probed at compile time) run precompiled Python ``re`` per row over the
-  same batches. All paths are tested byte-identical against a
-  single-threaded Python oracle (input_hint invariant).
+  %{GREEDYDATA:message}`` compiles ONCE on the driver into a Java regex, an
+  RE2 regex with named groups, and a Python ``re`` fallback. A single
+  pattern is a ``CompiledGrokSet`` of one, and each engine has one
+  executor over a set: native Columns (``grok_set_native_stage``:
+  regexp_extract per field, whole-stage codegen) and one scalar
+  ``arrow_udf`` over the text column (``grok_arrow_stage``, no pandas):
+  pyarrow's ``extract_regex`` — a true RE2 engine in C over the Arrow
+  buffers, zero per-row Python — which is the north rule's "batched
+  re2-style matchers" literally (RE2 is also the reference's Go regexp
+  dialect). Patterns RE2 can't compile (probed at compile time) run
+  precompiled Python ``re`` per row over the same batches. Both executors
+  are tested byte-identical against a single-threaded Python oracle
+  (input_hint invariant).
 
 Grok base patterns are the public grok vocabulary (non-capturing internals so
 field ⇒ capture-group index is positional).
@@ -105,59 +110,10 @@ BASE_PATTERNS: dict[str, str] = {
 _GROK_REF = re.compile(r"%\{(\w+)(?::(\w+))?\}")
 
 
-def _decapture(fragment: str) -> str:
-    """Rewrite every bare capturing ``(`` in a regex fragment to ``(?:``.
-
-    Guarantees that the ONLY capturing groups in a compiled grok regex are
-    the field groups, so field i ⇔ group i+1 holds even when the user writes
-    literal parens around refs (``(%{WORD:x})?``) or supplies extra vocab
-    with parens — otherwise the field→group mapping silently shifts and
-    every extraction is wrong. Semantics-preserving under the engine's
-    documented RE2-style dialect: RE2 has no backreferences, so a capturing
-    vs non-capturing group cannot change what matches."""
-    out: list[str] = []
-    i, n = 0, len(fragment)
-    in_class = False
-    while i < n:
-        ch = fragment[i]
-        if ch == "\\":
-            out.append(fragment[i : i + 2])
-            i += 2
-            continue
-        if in_class:
-            if ch == "]":
-                in_class = False
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "[":
-            in_class = True
-            out.append(ch)
-            i += 1
-            # leading ^ and a literal ] right after it stay inside the class
-            if i < n and fragment[i] == "^":
-                out.append("^")
-                i += 1
-            if i < n and fragment[i] == "]":
-                out.append("]")
-                i += 1
-            continue
-        if ch == "(" and not (i + 1 < n and fragment[i + 1] == "?"):
-            out.append("(?:")
-            i += 1
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _named_regex(regex: str) -> str:
-    """Rewrite the i-th capturing ``(`` to a named group ``(?P<gi>`` —
-    pyarrow's RE2 extract_regex surfaces captures by NAME only. _decapture
-    guarantees capturing parens == field groups in positional order, so
-    ``gi`` ↔ ``fields[i]``. (Positional synthetic names, not the field
-    names themselves: field names may legally repeat across a grok set's
-    union handling, and RE2 rejects duplicate group names.)"""
+def _rewrite_captures(regex: str, opener: Callable[[int], str]) -> str:
+    """``regex`` with its i-th bare capturing ``(`` replaced by ``opener(i)``.
+    Escapes and character classes are skipped, so a ``(`` after ``\\`` or
+    inside ``[...]`` stays literal."""
     out: list[str] = []
     i, n, g = 0, len(regex), 0
     in_class = False
@@ -177,6 +133,7 @@ def _named_regex(regex: str) -> str:
             in_class = True
             out.append(ch)
             i += 1
+            # leading ^ and a literal ] right after it stay inside the class
             if i < n and regex[i] == "^":
                 out.append("^")
                 i += 1
@@ -185,13 +142,36 @@ def _named_regex(regex: str) -> str:
                 i += 1
             continue
         if ch == "(" and not (i + 1 < n and regex[i + 1] == "?"):
-            out.append(f"(?P<g{g}>")
+            out.append(opener(g))
             g += 1
             i += 1
             continue
         out.append(ch)
         i += 1
     return "".join(out)
+
+
+def _decapture(fragment: str) -> str:
+    """Rewrite every bare capturing ``(`` in a regex fragment to ``(?:``.
+
+    Guarantees that the ONLY capturing groups in a compiled grok regex are
+    the field groups, so field i ⇔ group i+1 holds even when the user writes
+    literal parens around refs (``(%{WORD:x})?``) or supplies extra vocab
+    with parens — otherwise the field→group mapping silently shifts and
+    every extraction is wrong. Semantics-preserving under the engine's
+    documented RE2-style dialect: RE2 has no backreferences, so a capturing
+    vs non-capturing group cannot change what matches."""
+    return _rewrite_captures(fragment, lambda _: "(?:")
+
+
+def _named_regex(regex: str) -> str:
+    """Rewrite the i-th capturing ``(`` to a named group ``(?P<gi>`` —
+    pyarrow's RE2 extract_regex surfaces captures by NAME only. _decapture
+    guarantees capturing parens == field groups in positional order, so
+    ``gi`` ↔ ``fields[i]``. (Positional synthetic names, not the field
+    names themselves: field names may legally repeat across a grok set's
+    union handling, and RE2 rejects duplicate group names.)"""
+    return _rewrite_captures(regex, lambda g: f"(?P<g{g}>")
 
 
 def _arrow_re2_ok(named_regex: str) -> bool:
@@ -339,6 +319,11 @@ class CompiledGrokSet:
 
     patterns: tuple[CompiledGrok, ...]
     fields: tuple[str, ...]
+
+    @classmethod
+    def of(cls, grok: CompiledGrok) -> CompiledGrokSet:
+        """The set of one pattern."""
+        return cls((grok,), grok.fields)
 
 
 def compile_grok_set(
@@ -590,65 +575,6 @@ DEFAULT_CONTINUATION = r"^\s"
 _DEFAULT_BOUNDARY_RE = r"\n(?![ \t\x0B\f\r])"
 
 
-def _multiline_fold_guarded(
-    lines: Column,
-    cont,
-    max_lines: int | None,
-    flush_pattern: str | None,
-) -> Column:
-    """After-mode fold with the Beats guards. Accumulator carries the open
-    event's line count so the cap is O(1) state: a continuation line beyond
-    ``max_lines`` is discarded (event neither grows nor splits — Beats
-    truncation), and a line matching ``flush_pattern`` closes the event it
-    just joined. Same emit shape as the unguarded fold otherwise."""
-
-    def grew(cur: Column, n: Column, x: Column) -> Column:
-        if max_lines is None:
-            return F.concat(cur, F.lit("\n"), x)
-        return F.when(n < max_lines, F.concat(cur, F.lit("\n"), x)).otherwise(cur)
-
-    def grew_n(n: Column) -> Column:
-        if max_lines is None:
-            return n + 1
-        return F.when(n < max_lines, n + 1).otherwise(n)
-
-    def step(acc: Column, x: Column) -> Column:
-        ev, cur, n = (acc.getField(f) for f in ("events", "cur", "n"))
-        is_cont = cont(x) & cur.isNotNull()
-        new_ev = F.when(
-            is_cont | cur.isNull(), ev
-        ).otherwise(F.array_append(ev, cur))
-        new_cur = F.when(is_cont, grew(cur, n, x)).otherwise(x)
-        new_n = F.when(is_cont, grew_n(n)).otherwise(F.lit(1))
-        open_acc = F.struct(
-            new_ev.alias("events"), new_cur.alias("cur"), new_n.alias("n")
-        )
-        if flush_pattern is None:
-            return open_acc
-        return F.when(
-            x.rlike(flush_pattern),
-            F.struct(
-                F.array_append(new_ev, new_cur).alias("events"),
-                F.lit(None).cast("string").alias("cur"),
-                F.lit(0).alias("n"),
-            ),
-        ).otherwise(open_acc)
-
-    folded = F.aggregate(
-        lines,
-        F.struct(
-            F.array().cast("array<string>").alias("events"),
-            F.lit(None).cast("string").alias("cur"),
-            F.lit(0).alias("n"),
-        ),
-        step,
-        lambda acc: F.when(
-            acc.getField("cur").isNull(), acc.getField("events")
-        ).otherwise(F.array_append(acc.getField("events"), acc.getField("cur"))),
-    )
-    return folded.cast("array<string>")
-
-
 def multiline_join(
     text: Column | str,
     continuation: str = DEFAULT_CONTINUATION,
@@ -688,8 +614,8 @@ def multiline_join(
     Fast path: for the default after-mode ``^\\s`` continuation with no
     guards the fold is equivalent to one regex split on event boundaries
     (proof in _DEFAULT_BOUNDARY_RE comment; pinned by tests against the
-    general fold). Every other config uses the general higher-order-function
-    fold."""
+    general fold). Every other config runs one higher-order-function fold
+    whose accumulator is (events, open event, its line count)."""
     if match not in ("after", "before"):
         raise ValueError(f"multiline match mode {match!r}: 'after' or 'before'")
     if max_lines is not None and max_lines < 1:
@@ -712,83 +638,48 @@ def multiline_join(
         m = x.rlike(continuation)
         return ~m if negate else m
 
-    lines = F.split(col, "\n")
-    if match == "after" and (max_lines is not None or flush_pattern is not None):
-        return _multiline_fold_guarded(lines, cont, max_lines, flush_pattern)
-    if match == "before":
-        # append every line to the open event; a line FAILING the test
-        # closes it. acc.cur == NULL ⇔ no open event; acc.n = lines in cur
-        # (the max_lines cap discards overflow lines, Beats truncation).
-        def joined(acc: Column, x: Column) -> Column:
-            cur, n = acc.getField("cur"), acc.getField("n")
-            grown = (
-                F.concat(cur, F.lit("\n"), x)
-                if max_lines is None
-                else F.when(
-                    n < max_lines, F.concat(cur, F.lit("\n"), x)
-                ).otherwise(cur)
-            )
-            return F.when(cur.isNull(), x).otherwise(grown)
-
-        folded = F.aggregate(
-            lines,
+    def step(acc: Column, x: Column) -> Column:
+        # cur == NULL ⇔ no open event; n = lines in cur. A line joins the
+        # open event when it continues it (after) or whenever one is open
+        # (before); past max_lines it is discarded (Beats truncation).
+        ev, cur, n = (acc.getField(f) for f in ("events", "cur", "n"))
+        joins = cur.isNotNull() if match == "before" else cont(x) & cur.isNotNull()
+        grown, grown_n = F.concat(cur, F.lit("\n"), x), n + 1
+        if max_lines is not None:
+            grown = F.when(n < max_lines, grown).otherwise(cur)
+            grown_n = F.when(n < max_lines, grown_n).otherwise(n)
+        new_ev = F.when(joins | cur.isNull(), ev).otherwise(F.array_append(ev, cur))
+        new_cur = F.when(joins, grown).otherwise(x)
+        open_acc = F.struct(
+            new_ev.alias("events"),
+            new_cur.alias("cur"),
+            F.when(joins, grown_n).otherwise(F.lit(1)).alias("n"),
+        )
+        # the line closes its event: it fails the test (before) or matches
+        # flush_pattern (after)
+        if match == "before":
+            closes = ~cont(x)
+        elif flush_pattern is not None:
+            closes = x.rlike(flush_pattern)
+        else:
+            return open_acc
+        return F.when(
+            closes,
             F.struct(
-                F.array().cast("array<string>").alias("events"),
+                F.array_append(new_ev, new_cur).alias("events"),
                 F.lit(None).cast("string").alias("cur"),
                 F.lit(0).alias("n"),
             ),
-            lambda acc, x: F.when(
-                cont(x),
-                F.struct(
-                    acc.getField("events").alias("events"),
-                    joined(acc, x).alias("cur"),
-                    (
-                        acc.getField("n") + 1
-                        if max_lines is None
-                        else F.when(
-                            acc.getField("n") < max_lines, acc.getField("n") + 1
-                        ).otherwise(acc.getField("n"))
-                    ).alias("n"),
-                ),
-            ).otherwise(
-                F.struct(
-                    F.array_append(acc.getField("events"), joined(acc, x)).alias(
-                        "events"
-                    ),
-                    F.lit(None).cast("string").alias("cur"),
-                    F.lit(0).alias("n"),
-                )
-            ),
-            lambda acc: F.when(
-                acc.getField("cur").isNull(), acc.getField("events")
-            ).otherwise(
-                F.array_append(acc.getField("events"), acc.getField("cur"))
-            ),
-        )
-        return folded.cast("array<string>")
-    # after-mode general fold (non-default pattern and/or negate)
+        ).otherwise(open_acc)
+
     folded = F.aggregate(
-        lines,
+        F.split(col, "\n"),
         F.struct(
             F.array().cast("array<string>").alias("events"),
             F.lit(None).cast("string").alias("cur"),
+            F.lit(0).alias("n"),
         ),
-        lambda acc, x: F.when(
-            cont(x) & acc.getField("cur").isNotNull(),
-            F.struct(
-                acc.getField("events").alias("events"),
-                F.concat(acc.getField("cur"), F.lit("\n"), x).alias("cur"),
-            ),
-        ).otherwise(
-            F.struct(
-                F.when(
-                    acc.getField("cur").isNull(), acc.getField("events")
-                )
-                .otherwise(F.array_append(acc.getField("events"), acc.getField("cur")))
-                .alias("events"),
-                x.alias("cur"),
-            )
-        ),
+        step,
         lambda acc: F.when(
             acc.getField("cur").isNull(), acc.getField("events")
         ).otherwise(F.array_append(acc.getField("events"), acc.getField("cur"))),
@@ -837,69 +728,11 @@ def with_grok_native(
     stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Adds ``out``: one struct of captures, NULL when the regex does not
-    match (the row failure of mapper.go:145-150 — NOT an empty string).
-    ``stage``: ``grok_native_stage`` of the same arguments, built earlier
+    match (the row failure of mapper.go:145-150 — NOT an empty string). The
+    native executor over the set of one pattern, without the index column.
+    ``stage``: the executor's stage for the same arguments, built earlier
     and reused (likewise for the other ``with_grok_*``)."""
-    return (stage or grok_native_stage(col, grok, out))(df)
-
-
-def grok_native_stage(
-    col: str, grok: CompiledGrok, out: str = "parsed"
-) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_native``'s Columns, built once: the returned function
-    only adds them to a frame.
-
-    Each field is one ``regexp_extract`` projected into its own temporary
-    column, so every capture runs once per row; the match test then reads
-    the witness capture (``CompiledGrok.witness``) instead of running the
-    regex again, and only a pattern without a witness keeps one ``rlike``.
-    The struct is built in a second projection over the captures:
-    Catalyst's CollapseProject does not inline a non-cheap alias that is
-    referenced twice (the witness, in the test and in the struct), so the
-    captures are not re-evaluated inside the ``CASE WHEN``. The
-    temporaries are dropped before returning."""
-    caps = [f"__{out}_g{i}" for i in range(len(grok.fields))]
-    c = F.col(col)
-    captures = {t: F.regexp_extract(c, grok.regex, i + 1) for i, t in enumerate(caps)}
-    if grok.witness is None:
-        matched = c.rlike(grok.regex)
-    else:
-        matched = F.col(caps[grok.witness - 1]) != ""
-    parsed = F.when(
-        matched, F.struct(*[F.col(t).alias(f) for t, f in zip(caps, grok.fields)])
-    )
-    return Stage().with_columns(captures).with_column(out, parsed).drop(*caps)
-
-
-def grok_set_native(col: Column | str, gs: CompiledGrokSet) -> tuple[Column, Column]:
-    """First-match-wins over the pattern list, all in Columns: one
-    ``when(rlike(p0), struct0).when(rlike(p1), struct1)...`` chain — Catalyst
-    short-circuits, so a row matched by pattern 0 never evaluates pattern 1's
-    regex. Returns (struct_col, pattern_idx_col); both NULL when no pattern
-    matches (the row-failure path). Each per-pattern struct is widened to the
-    union field schema with NULL for fields that pattern lacks."""
-    c = F.col(col) if isinstance(col, str) else col
-    struct_chain: Column | None = None
-    idx_chain: Column | None = None
-    for i, g in enumerate(gs.patterns):
-        matched = c.rlike(g.regex)
-        cols = []
-        for name in gs.fields:
-            if name in g.fields:
-                cols.append(
-                    F.regexp_extract(c, g.regex, g.fields.index(name) + 1).alias(name)
-                )
-            else:
-                cols.append(F.lit(None).cast("string").alias(name))
-        s = F.struct(*cols)
-        idx = F.lit(i)
-        if struct_chain is None:
-            struct_chain = F.when(matched, s)
-            idx_chain = F.when(matched, idx)
-        else:
-            struct_chain = struct_chain.when(matched, s)
-            idx_chain = idx_chain.when(matched, idx)
-    return struct_chain, idx_chain
+    return (stage or grok_set_native_stage(col, CompiledGrokSet.of(grok), out))(df)
 
 
 def with_grok_set_native(
@@ -908,15 +741,52 @@ def with_grok_set_native(
 ) -> DataFrame:
     """Adds ``out`` (union-schema capture struct, NULL = no pattern matched)
     and ``out + PATTERN_IDX_SUFFIX`` (int index of the winning pattern)."""
-    return (stage or grok_set_native_stage(col, gs, out))(df)
+    return (stage or grok_set_native_stage(col, gs, out, out + PATTERN_IDX_SUFFIX))(df)
 
 
 def grok_set_native_stage(
-    col: str, gs: CompiledGrokSet, out: str = "parsed"
-) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_set_native``'s Columns, built once."""
-    struct, idx = grok_set_native(col, gs)
-    return Stage().with_column(out, struct).with_column(out + PATTERN_IDX_SUFFIX, idx)
+    col: str, gs: CompiledGrokSet, out: str = "parsed", index_col: str | None = None
+) -> Stage:
+    """The native grok executor, built once: the returned stage only adds
+    its Columns to a frame. Patterns run first-match-wins; ``out`` is the
+    union-schema struct of the winning pattern's captures ('' for its
+    groups that did not take part, NULL for the fields it lacks) and NULL
+    where no pattern matched, and so is ``index_col`` when given.
+
+    Pattern 0 runs on every row, so each of its fields is one
+    ``regexp_extract`` projected into its own temporary column, and its
+    match test reads the witness capture (``CompiledGrok.witness``) instead
+    of running the regex again; only a pattern without a witness keeps one
+    ``rlike``. The struct is built in a second projection over the
+    captures: Catalyst's CollapseProject does not inline a non-cheap alias
+    that is referenced twice (the witness, in the test and in the struct),
+    so the captures are not re-evaluated inside the ``CASE WHEN``. Each
+    later pattern adds a ``when(rlike(p_i), struct_i)`` branch with its
+    captures inline, so it runs only over the rows the patterns before it
+    missed. The temporaries are dropped before returning."""
+    c = F.col(col)
+    first = gs.patterns[0]
+    caps = [f"__{out}_g{i}" for i in range(len(first.fields))]
+    captures = {t: F.regexp_extract(c, first.regex, i + 1) for i, t in enumerate(caps)}
+
+    def struct(g: CompiledGrok, capture: Callable[[int], Column]) -> Column:
+        return F.struct(*[
+            (capture(g.fields.index(f)) if f in g.fields else F.lit(None).cast("string")).alias(f)
+            for f in gs.fields
+        ])
+
+    if first.witness is None:
+        matched = c.rlike(first.regex)
+    else:
+        matched = F.col(caps[first.witness - 1]) != ""
+    parsed = F.when(matched, struct(first, lambda k: F.col(caps[k])))
+    idx = F.when(matched, F.lit(0))
+    for i, g in enumerate(gs.patterns[1:], 1):
+        matched = c.rlike(g.regex)
+        parsed = parsed.when(matched, struct(g, lambda k: F.regexp_extract(c, g.regex, k + 1)))
+        idx = idx.when(matched, F.lit(i))
+    outputs = {out: parsed} if index_col is None else {out: parsed, index_col: idx}
+    return Stage().with_columns(captures).with_columns(outputs).drop(*caps)
 
 
 # ---------------------------------------------------------------------------
@@ -928,17 +798,9 @@ def with_grok_vectorized(
     stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Adds ``out`` as ``with_grok_native`` does, over Arrow batches in a
-    Python worker (``grok_vectorized_stage``)."""
-    return (stage or grok_vectorized_stage(col, grok, out))(df)
-
-
-def grok_vectorized_stage(
-    col: str, grok: CompiledGrok, out: str = "parsed"
-) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_vectorized``'s Columns, built once: the Arrow grok
-    executor (``grok_arrow_stage``) with one pattern, without the pattern
-    index column."""
-    return grok_arrow_stage(col, (grok,), grok.fields, out)
+    Python worker: the Arrow executor over the set of one pattern, without
+    the index column."""
+    return (stage or grok_arrow_stage(col, CompiledGrokSet.of(grok), out))(df)
 
 
 def with_grok_set_vectorized(
@@ -946,28 +808,12 @@ def with_grok_set_vectorized(
     stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Adds ``out`` and ``out + PATTERN_IDX_SUFFIX`` as
-    ``with_grok_set_native`` does, over Arrow batches in a Python worker
-    (``grok_set_vectorized_stage``)."""
-    return (stage or grok_set_vectorized_stage(col, gs, out))(df)
-
-
-def grok_set_vectorized_stage(
-    col: str, gs: CompiledGrokSet, out: str = "parsed"
-) -> Callable[[DataFrame], DataFrame]:
-    """``with_grok_set_vectorized``'s Columns, built once: the Arrow grok
-    executor (``grok_arrow_stage``) over the set's patterns, with the
-    pattern index column."""
-    return grok_arrow_stage(
-        col, gs.patterns, gs.fields, out, index_col=out + PATTERN_IDX_SUFFIX
-    )
+    ``with_grok_set_native`` does, over Arrow batches in a Python worker."""
+    return (stage or grok_arrow_stage(col, gs, out, out + PATTERN_IDX_SUFFIX))(df)
 
 
 def grok_arrow_stage(
-    col: str,
-    patterns: tuple[CompiledGrok, ...],
-    fields: tuple[str, ...],
-    out: str = "parsed",
-    index_col: str | None = None,
+    col: str, gs: CompiledGrokSet, out: str = "parsed", index_col: str | None = None
 ) -> Stage:
     """The Arrow grok executor: ONE scalar ``arrow_udf`` from the text
     column (a ``pa.Array``) to a struct of captures and the winning
@@ -988,9 +834,10 @@ def grok_arrow_stage(
     semantics. Any other pattern (lookaround, backreferences) runs Python
     ``re`` with ``re.ASCII`` (``CompiledGrok.python``), a ``search`` per
     row, with '' for a group that did not take part. Either way a matched
-    row carries '' for its pattern's missing groups and NULL for the
-    ``fields`` its pattern lacks; ``out`` is NULL where no pattern matched,
-    and so is ``index_col`` when given."""
+    row carries '' for its pattern's missing groups and NULL for the set's
+    fields its pattern lacks; ``out`` is NULL where no pattern matched, and
+    so is ``index_col`` when given."""
+    fields = gs.fields
     nf = len(fields)
     # per pattern: RE2 pattern or None, Python pattern or None, and for each
     # output field the pattern's capture index (None: pattern lacks it)
@@ -1000,7 +847,7 @@ def grok_arrow_stage(
             None if g.arrow_re2 else g.python,
             tuple(g.fields.index(f) if f in g.fields else None for f in fields),
         )
-        for g in patterns
+        for g in gs.patterns
     ]
     names = [f"g{i}" for i in range(nf)] + ["idx"]
     ret_t = T.StructType(

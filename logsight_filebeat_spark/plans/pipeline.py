@@ -53,9 +53,8 @@ from logsight_filebeat_spark.operators.enrich import (
 )
 from logsight_filebeat_spark.operators.log_mapper import ERROR_COL, to_log, to_log_stage
 from logsight_filebeat_spark.operators.parse import (
-    CompiledGrok,
+    PATTERN_IDX_SUFFIX,
     CompiledGrokSet,
-    compile_grok,
     compile_grok_set,
 )
 from logsight_filebeat_spark.operators.router import SINK_COL, route, route_stage
@@ -78,16 +77,6 @@ class Lookup:
     _rows: list[dict] | None = field(default=None, init=False, repr=False, compare=False)
 
 
-# (grok is a pattern list, vectorized) → (operator, stage builder) in parse_ops;
-# looked up by name on each call, so wrappers set on parse_ops (tracing) apply
-_GROK_OPS = {
-    (False, False): ("with_grok_native", "grok_native_stage"),
-    (False, True): ("with_grok_vectorized", "grok_vectorized_stage"),
-    (True, False): ("with_grok_set_native", "grok_set_native_stage"),
-    (True, True): ("with_grok_set_vectorized", "grok_set_vectorized_stage"),
-}
-
-
 @dataclass(frozen=True)
 class _MapStages:
     """Every map-stage layer's Columns for one input schema, and
@@ -104,9 +93,9 @@ class _MapStages:
 @dataclass(frozen=True)  # frozen: _stages is built from these fields
 class PipelinePlan:
     cfg: PipelineConfig
-    # a single pattern or a first-match-wins fallback chain (heterogeneous
+    # a first-match-wins pattern chain, often of one pattern (heterogeneous
     # corpora: one pattern per line format, Beats' multi-pattern config)
-    grok: CompiledGrok | CompiledGrokSet
+    grok: CompiledGrokSet
     multiline: bool = True
     vectorized: bool = False  # grok via one Arrow UDF instead of native Columns
     lookups: list[Lookup] = field(default_factory=list)
@@ -137,11 +126,12 @@ class PipelinePlan:
         if self.multiline:
             df = parse_ops.explode_multiline(df, "text", "event_text", stage=st.multiline)
             src = "event_text"
-        op = getattr(parse_ops, self._grok_ops()[0])
+        # looked up on parse_ops on each call, so wrappers set there (tracing) apply
+        op = (
+            parse_ops.with_grok_set_vectorized if self.vectorized
+            else parse_ops.with_grok_set_native
+        )
         return op(df, src, self.grok, "parsed", stage=st.grok)
-
-    def _grok_ops(self) -> tuple[str, str]:
-        return _GROK_OPS[isinstance(self.grok, CompiledGrokSet), self.vectorized]
 
     def _stages_for(self, pages: DataFrame) -> _MapStages:
         """The map stage's Columns for ``pages.schema``, and the aggregate
@@ -156,7 +146,8 @@ class PipelinePlan:
         if self.multiline:
             multiline = parse_ops.multiline_stage("text", "event_text")
             df, src = multiline(df), "event_text"
-        grok = getattr(parse_ops, self._grok_ops()[1])(src, self.grok, "parsed")
+        build = parse_ops.grok_arrow_stage if self.vectorized else parse_ops.grok_set_native_stage
+        grok = build(src, self.grok, "parsed", "parsed" + PATTERN_IDX_SUFFIX)
         df = grok(df)
         log = to_log_stage(df.schema, self.cfg, self.event_ts_col)
         df = log(df)
@@ -267,17 +258,17 @@ def compile(
 
     ``grok_pattern`` may be a LIST of patterns, tried first-match-wins per
     event (real corpora are heterogeneous; a single pattern quarantines
-    every other line format). The mapper keys (cfg.message_key etc.) address
-    the union field schema — a field the winning pattern lacks is NULL,
-    which the validation stage turns into a per-row failure as usual."""
+    every other line format); a single pattern is a list of one. The mapper
+    keys (cfg.message_key etc.) address the union field schema — a field
+    the winning pattern lacks is NULL, which the validation stage turns
+    into a per-row failure as usual. ``parsed`` carries the winning
+    pattern's index as ``parsed_pattern``."""
     cfg.validate()
-    if isinstance(grok_pattern, (list, tuple)):
-        grok: CompiledGrok | CompiledGrokSet = compile_grok_set(list(grok_pattern))
-    else:
-        grok = compile_grok(grok_pattern)
+    if isinstance(grok_pattern, str):
+        grok_pattern = [grok_pattern]
     return PipelinePlan(
         cfg=cfg,
-        grok=grok,
+        grok=compile_grok_set(list(grok_pattern)),
         multiline=multiline,
         vectorized=vectorized,
         lookups=[_pin_small(lk) for lk in lookups or []],

@@ -31,8 +31,8 @@ Its compiled jar, ``jvm/localfs.jar``, goes first on the driver's and the
 executors' ``extraClassPath``, merged with any value the caller passes. A
 class path is fixed when its JVM starts: in a process whose driver JVM is
 already running (spark-submit, or a stopped session built elsewhere), pass
-the jar at launch (``--driver-class-path``) or the first ``file:`` access
-fails with ``ClassNotFoundException``.
+the jar at launch (``--driver-class-path``): ``get_spark`` raises a
+``RuntimeError`` when the running JVM cannot load the class.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory holding this package, for the Python workers' import path
@@ -168,4 +169,11 @@ def get_spark(
         builder = builder.config(k, os.pathsep.join([first] + rest))
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(_LOCAL_FS):
+        raise RuntimeError(
+            f"the running JVM cannot load {_LOCAL_FS}, which fs.file.impl names: "
+            f"it started without {LOCALFS_JAR} on its class path; pass the jar "
+            f"when the JVM starts (spark-submit --driver-class-path {LOCALFS_JAR})"
+        )
+    return spark

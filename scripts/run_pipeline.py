@@ -77,10 +77,7 @@ def main(argv: list[str] | None = None) -> int:
             ),
             Lookup(table=lang_meta(spark), on="lang", tag_cols={"lang_name": "lang_name"}),
         ]
-    grok = args.grok if args.grok and len(args.grok) > 1 else (
-        args.grok[0] if args.grok else DEFAULT_GROK
-    )
-    plan = compile(cfg, grok_pattern=grok, lookups=lookups)
+    plan = compile(cfg, grok_pattern=args.grok or DEFAULT_GROK, lookups=lookups)
 
     if args.stream:
         from logsight_filebeat_spark.streaming.micro_batch import run_stream

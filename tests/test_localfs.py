@@ -98,6 +98,36 @@ def test_batch_and_stream_start_no_chmod_or_readlink(tmp_path):
     assert phases["run_stream"] == phases["session"], phases
 
 
+def test_get_spark_raises_when_the_running_jvm_lacks_the_jar(tmp_path):
+    """A class path is fixed when its JVM starts. After a stock session has
+    started and stopped, the driver JVM has no ``localfs.jar``, so
+    ``get_spark`` must raise at once instead of leaving a session whose
+    first ``file:`` access fails with ``ClassNotFoundException``."""
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        from logsight_filebeat_spark.session import get_spark
+
+        SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false") \\
+            .getOrCreate().stop()
+        try:
+            get_spark(master="local[1]", shuffle_partitions=1)
+        except RuntimeError as e:
+            print("RAISED", e)
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    env["SPARK_LOCAL_DIRS"] = str(tmp_path / "local")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    [line] = [ln for ln in proc.stdout.splitlines() if ln.startswith("RAISED ")]
+    assert LOCALFS_JAR in line and "--driver-class-path" in line, line
+
+
 # --- the file system's semantics against Hadoop's stock one ---------------
 
 

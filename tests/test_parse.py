@@ -10,6 +10,8 @@ from __future__ import annotations
 import re
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from logsight_filebeat_spark.operators.parse import (
@@ -159,28 +161,31 @@ def test_pages_schema_and_failure_shapes(spark):
     assert r.text in r.h
 
 
-def _ref_multiline(text, pattern, negate, match):
+def _ref_multiline(text, pattern, negate, match, max_lines=None, flush=None):
     """Single-threaded reference of the Beats multiline semantics."""
     pat = re.compile(pattern)
+    flush_p = re.compile(flush) if flush else None
 
     def cont(line):
         m = bool(pat.search(line))
         return (not m) if negate else m
 
-    events, cur = [], None
+    events, cur, n = [], None, 0
     for x in text.split("\n"):
-        if match == "after":
-            if cont(x) and cur is not None:
-                cur += "\n" + x
-            else:
-                if cur is not None:
-                    events.append(cur)
-                cur = x
-        else:  # before: line joins the open event; failing test closes it
-            cur = x if cur is None else cur + "\n" + x
-            if not cont(x):
+        # after: a continuation joins the open event; before: every line
+        # joins the open event. Lines past max_lines are discarded.
+        if cur is not None and (match == "before" or cont(x)):
+            if max_lines is None or n < max_lines:
+                cur, n = cur + "\n" + x, n + 1
+        else:
+            if cur is not None:
                 events.append(cur)
-                cur = None
+            cur, n = x, 1
+        # the line closes the event it joined: before, when it fails the
+        # test; after, when it matches the flush pattern
+        if (not cont(x)) if match == "before" else (flush_p and flush_p.search(x)):
+            events.append(cur)
+            cur, n = None, 0
     if cur is not None:
         events.append(cur)
     return events
@@ -213,6 +218,33 @@ def test_multiline_negate_and_before_modes(spark):
             assert got[i] == _ref_multiline(t, pattern, negate, match), (
                 pattern, negate, match, t,
             )
+
+
+# every multiline config: after/before × negate × max_lines × flush_pattern
+_ML_CONFIGS = [
+    (pattern, negate, match, max_lines, flush)
+    for pattern in (r"^\s", r"^\d{4}-", r"\\$")
+    for negate in (False, True)
+    for match in ("after", "before")
+    for max_lines in (None, 1, 2, 3)
+    for flush in ((None, "END") if match == "after" else (None,))
+]
+# no \r: Java's $ matches before it, Python's does not
+_ml_line = st.lists(
+    st.sampled_from(["a", "Z", "0", "2024-", " ", "\t", "\\", "END"]), max_size=5
+).map("".join)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.lists(_ml_line, min_size=1, max_size=8).map("\n".join), min_size=1, max_size=10))
+def test_multiline_every_config_matches_reference(spark, texts):
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(*[
+        multiline_join("text", *cfg).alias(f"c{i}") for i, cfg in enumerate(_ML_CONFIGS)
+    ]).collect()
+    for row, t in zip(rows, texts, strict=True):
+        for got, cfg in zip(row, _ML_CONFIGS, strict=True):
+            assert got == _ref_multiline(t, *cfg), (cfg, t)
 
 
 def test_multiline_bad_match_mode_raises():
@@ -576,30 +608,6 @@ def test_dissect_native_semantics(spark):
 # ---------------------------------------------------------------------------
 
 
-def _py_multiline_after(text, cont_re, max_lines=None, flush=None):
-    """Single-threaded reference for the guarded after-mode fold."""
-    import re as _re
-
-    cont = _re.compile(cont_re)
-    flush_p = _re.compile(flush) if flush else None
-    events, cur, n = [], None, 0
-    for line in text.split("\n"):
-        if cur is not None and cont.search(line):
-            if max_lines is None or n < max_lines:
-                cur = cur + "\n" + line
-                n += 1
-        else:
-            if cur is not None:
-                events.append(cur)
-            cur, n = line, 1
-        if flush_p is not None and flush_p.search(line):
-            events.append(cur)
-            cur, n = None, 0
-    if cur is not None:
-        events.append(cur)
-    return events
-
-
 def test_multiline_max_lines_truncates_without_splitting(spark):
     # 1 start + 5 continuations; max_lines=3 keeps the first 3 lines and
     # DISCARDS the rest (Beats truncation) — no second event appears
@@ -640,7 +648,7 @@ def test_multiline_guards_match_reference_fold(spark):
                 multiline_join("text", max_lines=ml, flush_pattern=fl).alias("e")
             ).collect()
         ]
-        want = [_py_multiline_after(t, r"^\s", ml, fl) for t in texts]
+        want = [_ref_multiline(t, r"^\s", False, "after", ml, fl) for t in texts]
         assert got == want, (ml, fl, got, want)
 
 

@@ -416,7 +416,7 @@ def test_task_retry_conf_maps_budget_to_attempts():
     }
 
 
-def test_get_spark_rewrites_local_master_for_retries():
+def test_get_spark_rewrites_local_master_for_retries(spark):
     """local[N] hardcodes maxFailures=1 and ignores spark.task.maxFailures;
     get_spark must emit the local[N,F] master form so the retry budget
     exists in local runs too. Assert on the builder's staged options (no

@@ -20,7 +20,6 @@ from logsight_filebeat_spark.operators.enrich import (
     url_host,
 )
 from logsight_filebeat_spark.operators.log_mapper import to_log
-from logsight_filebeat_spark.operators.parse import CompiledGrokSet
 from logsight_filebeat_spark.operators.router import route
 from logsight_filebeat_spark.plans import pipeline
 from logsight_filebeat_spark.plans.pipeline import (
@@ -66,10 +65,7 @@ def _uncached(plan, pages_df):
     df, src = pages_df, "text"
     if plan.multiline:
         df, src = parse_ops.explode_multiline(df, "text", "event_text"), "event_text"
-    if isinstance(plan.grok, CompiledGrokSet):
-        op = parse_ops.with_grok_set_vectorized if plan.vectorized else parse_ops.with_grok_set_native
-    else:
-        op = parse_ops.with_grok_vectorized if plan.vectorized else parse_ops.with_grok_native
+    op = parse_ops.with_grok_set_vectorized if plan.vectorized else parse_ops.with_grok_set_native
     df = to_log(op(df, src, plan.grok, "parsed"), plan.cfg, event_ts_col=plan.event_ts_col)
     for lk in plan.lookups:
         df = enrich_with_lookup(df, lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key)
@@ -154,10 +150,10 @@ def test_each_layer_operator_runs_once_per_batch(spark, tmp_path, monkeypatch):
 
     # the (sink, hour) aggregate is applied per batch, but built with the map stage
     assert {k: len(v) for k, v in calls.items()} == {
-        "explode_multiline": 2, "with_grok_native": 2, "to_log": 2,
+        "explode_multiline": 2, "with_grok_set_native": 2, "to_log": 2,
         "enrich_with_lookup": 4, "route": 2, "sink_hour_aggregates": 2,
     }
-    assert all(args[3] == "parsed" for args in calls["with_grok_native"])
+    assert all(args[3] == "parsed" for args in calls["with_grok_set_native"])
     assert [args[3] for args in calls["enrich_with_lookup"]] == [
         lk.tag_cols for lk in plan.lookups
     ] * 2

@@ -77,7 +77,7 @@ def test_flagship_runs_each_grok_and_route_regex_once(spark):
     def calls(fn, regex):
         return len(re.findall(fn + r"\(\w+#\d+, " + re.escape(regex) + r"[,)]", plan))
 
-    grok = flagship.grok
+    grok = flagship.grok.patterns[0]
     (rule,) = [r for r in flagship.cfg.routes if r.kind() == "regex"]
     assert calls("regexp_extract", grok.regex) == len(grok.fields), plan
     assert calls("RLIKE", grok.regex) == 0, plan
@@ -179,6 +179,37 @@ def test_grok_set_native_path_has_no_python_eval(spark):
     plan = _formatted(with_grok_set_native(df, "t", gs))
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan, marker
+
+
+def test_grok_set_native_runs_pattern_0_captures_once(spark):
+    """Pattern 0 of a native set runs like a single pattern: each capture is
+    one regexp_extract and the match test reads its witness, so its regex
+    never runs as RLIKE. Pattern 1 runs only inside the CASE WHEN, over
+    the rows pattern 0 missed."""
+    import re
+
+    from logsight_filebeat_spark.operators.parse import (
+        compile_grok_set,
+        with_grok_set_native,
+    )
+
+    gs = compile_grok_set(
+        ["%{TIMESTAMP_ISO8601:ts} %{GREEDYDATA:m}", "%{IP:ip} %{GREEDYDATA:m}"]
+    )
+    p0, p1 = gs.patterns
+    assert p0.witness is not None
+    df = spark.read.parquet(PAGES).select("text")
+    plan = with_grok_set_native(df, "text", gs)._jdf.queryExecution().optimizedPlan().toString()
+
+    def calls(fn, regex):
+        return len(re.findall(fn + r"\(\w+#\d+, " + re.escape(regex) + r"[,)]", plan))
+
+    assert calls("regexp_extract", p0.regex) == len(p0.fields), plan
+    assert calls("RLIKE", p0.regex) == 0, plan
+    assert calls("RLIKE", p1.regex) >= 1, plan
+    for line in plan.splitlines():
+        for m in re.finditer(re.escape(p1.regex), line):
+            assert line.rfind("CASE WHEN", 0, m.start()) > line.rfind(" END", 0, m.start()), line
 
 
 def test_ivf_codebook_selection_is_distributed(spark):
