@@ -641,36 +641,36 @@ def multiline_join(
     def step(acc: Column, x: Column) -> Column:
         # cur == NULL ⇔ no open event; n = lines in cur. A line joins the
         # open event when it continues it (after) or whenever one is open
-        # (before); past max_lines it is discarded (Beats truncation).
+        # (before); past max_lines it is discarded (Beats truncation). The
+        # lambda body is evaluated without common-subexpression sharing,
+        # so each test is one branch condition: every regex runs at most
+        # once per line.
         ev, cur, n = (acc.getField(f) for f in ("events", "cur", "n"))
-        joins = cur.isNotNull() if match == "before" else cont(x) & cur.isNotNull()
+        # the line closes the event it joined or opened: it fails the test
+        # (before) or matches flush_pattern (after)
+        if match == "before":
+            close = ~cont(x)
+        else:
+            close = None if flush_pattern is None else x.rlike(flush_pattern)
+
+        def acc_of(events: Column, open_: Column, lines: Column) -> Column:
+            kept = F.struct(events.alias("events"), open_.alias("cur"), lines.alias("n"))
+            if close is None:
+                return kept
+            return F.when(close, F.struct(
+                F.array_append(events, open_).alias("events"),
+                F.lit(None).cast("string").alias("cur"),
+                F.lit(0).alias("n"),
+            )).otherwise(kept)
+
         grown, grown_n = F.concat(cur, F.lit("\n"), x), n + 1
         if max_lines is not None:
             grown = F.when(n < max_lines, grown).otherwise(cur)
             grown_n = F.when(n < max_lines, grown_n).otherwise(n)
-        new_ev = F.when(joins | cur.isNull(), ev).otherwise(F.array_append(ev, cur))
-        new_cur = F.when(joins, grown).otherwise(x)
-        open_acc = F.struct(
-            new_ev.alias("events"),
-            new_cur.alias("cur"),
-            F.when(joins, grown_n).otherwise(F.lit(1)).alias("n"),
-        )
-        # the line closes its event: it fails the test (before) or matches
-        # flush_pattern (after)
-        if match == "before":
-            closes = ~cont(x)
-        elif flush_pattern is not None:
-            closes = x.rlike(flush_pattern)
-        else:
-            return open_acc
-        return F.when(
-            closes,
-            F.struct(
-                F.array_append(new_ev, new_cur).alias("events"),
-                F.lit(None).cast("string").alias("cur"),
-                F.lit(0).alias("n"),
-            ),
-        ).otherwise(open_acc)
+        joins = cur.isNotNull() if match == "before" else cur.isNotNull() & cont(x)
+        return F.when(joins, acc_of(ev, grown, grown_n)).otherwise(acc_of(
+            F.when(cur.isNull(), ev).otherwise(F.array_append(ev, cur)), x, F.lit(1)
+        ))
 
     folded = F.aggregate(
         F.split(col, "\n"),

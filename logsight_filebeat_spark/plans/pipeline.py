@@ -147,7 +147,9 @@ class PipelinePlan:
             multiline = parse_ops.multiline_stage("text", "event_text")
             df, src = multiline(df), "event_text"
         build = parse_ops.grok_arrow_stage if self.vectorized else parse_ops.grok_set_native_stage
-        grok = build(src, self.grok, "parsed", "parsed" + PATTERN_IDX_SUFFIX)
+        # a one-pattern plan's index would only restate ``parsed IS NOT NULL``
+        index = "parsed" + PATTERN_IDX_SUFFIX if len(self.grok.patterns) > 1 else None
+        grok = build(src, self.grok, "parsed", index)
         df = grok(df)
         log = to_log_stage(df.schema, self.cfg, self.event_ts_col)
         df = log(df)
@@ -261,8 +263,8 @@ def compile(
     every other line format); a single pattern is a list of one. The mapper
     keys (cfg.message_key etc.) address the union field schema — a field
     the winning pattern lacks is NULL, which the validation stage turns
-    into a per-row failure as usual. ``parsed`` carries the winning
-    pattern's index as ``parsed_pattern``."""
+    into a per-row failure as usual. With two or more patterns, ``parsed``
+    carries the winning pattern's index as ``parsed_pattern``."""
     cfg.validate()
     if isinstance(grok_pattern, str):
         grok_pattern = [grok_pattern]

@@ -171,6 +171,9 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(_LOCAL_FS):
+        # every file: access of this session would fail, and a later
+        # getOrCreate() would hand it out again
+        spark.stop()
         raise RuntimeError(
             f"the running JVM cannot load {_LOCAL_FS}, which fs.file.impl names: "
             f"it started without {LOCALFS_JAR} on its class path; pass the jar "

@@ -101,8 +101,9 @@ def test_batch_and_stream_start_no_chmod_or_readlink(tmp_path):
 def test_get_spark_raises_when_the_running_jvm_lacks_the_jar(tmp_path):
     """A class path is fixed when its JVM starts. After a stock session has
     started and stopped, the driver JVM has no ``localfs.jar``, so
-    ``get_spark`` must raise at once instead of leaving a session whose
-    first ``file:`` access fails with ``ClassNotFoundException``."""
+    ``get_spark`` must stop the session it got and raise at once instead
+    of leaving a session whose first ``file:`` access fails with
+    ``ClassNotFoundException``."""
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {REPO!r})
@@ -115,6 +116,7 @@ def test_get_spark_raises_when_the_running_jvm_lacks_the_jar(tmp_path):
             get_spark(master="local[1]", shuffle_partitions=1)
         except RuntimeError as e:
             print("RAISED", e)
+        print("ACTIVE", SparkSession.getActiveSession())
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEM"] = "1g"
@@ -126,6 +128,7 @@ def test_get_spark_raises_when_the_running_jvm_lacks_the_jar(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     [line] = [ln for ln in proc.stdout.splitlines() if ln.startswith("RAISED ")]
     assert LOCALFS_JAR in line and "--driver-class-path" in line, line
+    assert "ACTIVE None" in proc.stdout.splitlines(), proc.stdout  # the session was stopped
 
 
 # --- the file system's semantics against Hadoop's stock one ---------------

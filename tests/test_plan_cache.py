@@ -65,8 +65,13 @@ def _uncached(plan, pages_df):
     df, src = pages_df, "text"
     if plan.multiline:
         df, src = parse_ops.explode_multiline(df, "text", "event_text"), "event_text"
-    op = parse_ops.with_grok_set_vectorized if plan.vectorized else parse_ops.with_grok_set_native
-    df = to_log(op(df, src, plan.grok, "parsed"), plan.cfg, event_ts_col=plan.event_ts_col)
+    if len(plan.grok.patterns) > 1:
+        op = parse_ops.with_grok_set_vectorized if plan.vectorized else parse_ops.with_grok_set_native
+        grok = plan.grok
+    else:  # a one-pattern plan carries no pattern index
+        op = parse_ops.with_grok_vectorized if plan.vectorized else parse_ops.with_grok_native
+        grok = plan.grok.patterns[0]
+    df = to_log(op(df, src, grok, "parsed"), plan.cfg, event_ts_col=plan.event_ts_col)
     for lk in plan.lookups:
         df = enrich_with_lookup(df, lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key)
     return route(df, plan.cfg)
